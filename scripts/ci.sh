@@ -9,7 +9,9 @@
 #   2. compile warnings-clean (`sbt compile` — scalac lint flags in build.sbt
 #      are the clippy analog available offline; no new deps)
 #      + full ScalaTest suite (`sbt test`)
-#   3. correctness gate: graft.Verify at sf0.001 + the DuckDB oracle compare
+#   3. benchmark harness compiles (`sbt compile` in perfbench/, which builds
+#      against src/main and pins engine signatures), with the offline flags
+#   4. correctness gate: graft.Verify at sf0.001 + the DuckDB oracle compare
 #      (scripts/check_oracle.py — the driver-side replica of the round gate)
 #
 # Usage: scripts/ci.sh [sfDir]   (default /root/testdata/sf0.001)
@@ -18,20 +20,25 @@ cd "$(dirname "$0")/.."
 
 SF="${1:-/root/testdata/sf0.001}"
 
-echo "[ci] 1/4 formatting gate"
+echo "[ci] 1/5 formatting gate"
 python3 scripts/fmtcheck.py
 
-echo "[ci] 2/4 compile + test"
+echo "[ci] 2/5 compile + test"
 sbt -batch compile test
 
-echo "[ci] 3/4 verify dump at $SF"
+echo "[ci] 3/5 benchmark harness compiles against src/main"
+(cd perfbench && COURSIER_MODE=offline SBT_OPTS="-Dsbt.override.build.repos=true \
+  -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx3g" \
+  sbt --batch compile)
+
+echo "[ci] 4/5 verify dump at $SF"
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OUT="$(mktemp -d /tmp/graft-ci.XXXXXX)"
 trap 'rm -rf "$OUT"' EXIT
 java -Xmx8g -cp "$CP" --add-exports java.base/sun.nio.ch=ALL-UNNAMED \
   graft.Verify "$SF" "$OUT"
 
-echo "[ci] 4/4 DuckDB oracle compare"
+echo "[ci] 5/5 DuckDB oracle compare"
 python3 scripts/check_oracle.py "$SF" "$OUT"
 
 echo "[ci] all gates green"

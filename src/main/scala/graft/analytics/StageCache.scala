@@ -60,12 +60,22 @@ private[graft] object StageCache {
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => deleteAll()))
 
-  /** The staged parquet of `build`, materializing on first call. */
+  /** The staged parquet of `build`, materializing on first call. The
+    * frame is built OUTSIDE any map call: a build may stage another key
+    * through this method (n4clusters stages n1pairs), and a nested
+    * `computeIfAbsent` on one map throws "Recursive update" when both keys
+    * share a bin. [[getOrBuildDir]] already builds each key once; racing
+    * first callers each read the stage and the first frame published wins. */
   def getOrBuild(spark: SparkSession, key: String)(build: => DataFrame)
       : DataFrame = {
     readFrames.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    readFrames.computeIfAbsent((spark, key), _ =>
-      spark.read.parquet(s"${getOrBuildDir(key) { dir => build.write.parquet(s"$dir/t"); () }}/t"))
+    val cached = readFrames.get((spark, key))
+    if (cached != null) cached
+    else {
+      val dir = getOrBuildDir(key) { dir => build.write.parquet(s"$dir/t"); () }
+      val frame = spark.read.parquet(s"$dir/t")
+      Option(readFrames.putIfAbsent((spark, key), frame)).getOrElse(frame)
+    }
   }
 
   /** Multi-output variant: `build` populates the returned directory

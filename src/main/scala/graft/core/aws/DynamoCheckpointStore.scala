@@ -26,8 +26,8 @@ trait DynamoApi {
   * (`src/store/dynamodb.rs:52-213` has no optimistic locking). All
   * retry policy stays OUTSIDE this class, in the spec-gated
   * [[graft.core.RetryingCheckpointStore]] decorator that replicates the
-  * reference's contract exactly (∞-default save retry / bounded-warns /
-  * swallow-opt-in), so the production wiring is:
+  * reference's contract (∞-default save retry; bounded retries surface
+  * their failure), so the production wiring is:
   *
   *   new RetryingCheckpointStore(new DynamoCheckpointStore(table, conf))
   *

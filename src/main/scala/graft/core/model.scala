@@ -77,34 +77,25 @@ object ShardIteratorType {
   final case class AtTimestamp(timestamp: Instant) extends ShardIteratorType
 }
 
-/** Monitoring configuration. Reference: `src/monitoring/types.rs:13-37`
-  * (defaults: disabled, channel 1000, 60 s window, rate limit 1000/s). */
-final case class MonitoringConfig(
-    enabled: Boolean = false,
-    channelSize: Int = 1000,
-    metricsIntervalMs: Long = 60000L,
-    includeRetryDetails: Boolean = false,
-    rateLimitPerSecond: Option[Int] = Some(1000)
-)
-
 /** Engine configuration. Mirrors the reference's `ProcessorConfig`
   * (`src/processor.rs:336-387`) with the same defaults:
-  * batch_size 100, api_timeout 30 s (declared, never enforced — kept for
-  * fidelity, see reference `src/processor.rs:343` with no call site),
-  * processing_timeout 300 s/attempt, no total timeout, TrimHorizon,
-  * prefer stored checkpoint, min batch accumulation 100 ms, max 10 poll
-  * loops per processing batch (`src/processor.rs:363-366,373-384`).
+  * batch_size 100, processing_timeout 300 s/attempt, no total timeout,
+  * TrimHorizon, prefer stored checkpoint, min batch accumulation 100 ms,
+  * max 10 poll loops per processing batch
+  * (`src/processor.rs:363-366,373-384`). The reference's `api_timeout`,
+  * `shard_refresh_interval` and `monitoring` settings have no counterpart:
+  * the reference never enforces `api_timeout` (`src/processor.rs:343`),
+  * the source re-lists shards at every micro-batch, and monitoring is
+  * whatever [[graft.monitoring.EventSink]] the engine is given.
   */
 final case class ProcessorConfig(
     streamName: String,
     batchSize: Int = 100,
-    apiTimeoutMs: Long = 30000L,
     processingTimeoutMs: Long = 300000L,
     totalTimeoutMs: Option[Long] = None,
     initialPosition: InitialPosition = InitialPosition.TrimHorizon,
     preferStoredCheckpoint: Boolean = true,
     maxConcurrentShards: Option[Int] = None,
-    shardRefreshIntervalMs: Long = 60000L,
     minimumBatchRetrievalTimeMs: Long = 100L,
     maxBatchRetrievalLoops: Option[Int] = Some(10),
     /** Client-level GetRecords retry bound (reference default Some(3),
@@ -116,8 +107,7 @@ final case class ProcessorConfig(
       * accepting bounded at-least-once replay. Default false = exact resume
       * from the last consumed index (no replay), which an indexed client
       * can always do. */
-    expiryFallbackLadder: Boolean = false,
-    monitoring: MonitoringConfig = MonitoringConfig()
+    expiryFallbackLadder: Boolean = false
 ) {
   /** Validation mirroring `src/processor.rs:1701-1717` (the reference panics
     * on invalid config at construction, `src/processor.rs:599-602`),

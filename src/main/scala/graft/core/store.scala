@@ -31,39 +31,28 @@ final class InMemoryCheckpointStore extends CheckpointStore {
   * contract (`src/store/dynamodb.rs:137-186`):
   *   - `maxRetries = None` (default) → save retries FOREVER with backoff —
   *     checkpoint durability beats liveness;
-  *   - bounded retries → warn and swallow the error — processing continues
-  *     on checkpoint failure (reference lines 173-182).
-  * Reads use the same retry policy but always surface their error (a failed
+  *   - bounded retries → exhaustion SURFACES as [[CheckpointError]], like
+  *     the reference store returning the error after bounded retries
+  *     (reference lines 173-182), so a checkpoint is never silently skipped.
+  * Reads use the same retry policy and always surface their error (a failed
   * initial read is fatal in the reference, `src/processor.rs:765-791`).
   */
 final class RetryingCheckpointStore(
     underlying: CheckpointStore,
-    config: RetryConfig = RetryConfig(),
-    shutdown: ShutdownSignal = ShutdownSignal.never,
-    swallowBoundedFailure: Boolean = false,
-    onSwallowedError: (String, Throwable) => Unit = (_, _) => ()
+    config: RetryConfig = RetryConfig()
 ) extends CheckpointStore {
 
   override def getCheckpoint(shardId: String): Option[String] =
-    RetryHandle.retry(config, shutdown)(_ => underlying.getCheckpoint(shardId)) match {
+    RetryHandle.retry(config)(_ => underlying.getCheckpoint(shardId)) match {
       case Right(v) => v
       case Left(e)  => throw CheckpointError(s"get_checkpoint($shardId) failed", e)
     }
 
-  /** Bounded-retry exhaustion SURFACES by default (throws CheckpointError),
-    * matching the reference store returning the error after bounded retries
-    * (`store/dynamodb.rs:173-182`) so the processor can convert it into a
-    * soft error retried until success (`processor.rs:1620-1626`) — a
-    * checkpoint is never silently skipped. The reference's warn-and-continue
-    * behavior is the explicit `swallowBoundedFailure = true` policy. */
   override def saveCheckpoint(shardId: String, sequenceNumber: String): Unit =
-    RetryHandle.retry(config, shutdown)(_ => underlying.saveCheckpoint(shardId, sequenceNumber)) match {
+    RetryHandle.retry(config)(_ => underlying.saveCheckpoint(shardId, sequenceNumber)) match {
       case Right(_) => ()
-      case Left(e: RetryError.Interrupted) =>
-        throw CheckpointError(s"save_checkpoint($shardId) interrupted", e)
       case Left(e) =>
-        if (swallowBoundedFailure) onSwallowedError(shardId, e)
-        else throw CheckpointError(s"save_checkpoint($shardId) failed after bounded retries", e)
+        throw CheckpointError(s"save_checkpoint($shardId) failed after bounded retries", e)
     }
 }
 

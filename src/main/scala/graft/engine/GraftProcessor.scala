@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core._
 import graft.monitoring.{EventSink, ProcessingEvent, ProcessingEventType, ShardEventType}
 import graft.processor.{Processed, RecordProcessing, RecordProcessor}
-import graft.sources.{SourceClient, SourceClientRegistry}
+import graft.sources.{FactoryConstructible, IndexedSourceClient, IndexedThrottleRetryingClient, SourceClientRegistry}
 
 /** Per-shard commit work computed executor-side per micro-batch.
   * `validated=false` means the T2 loop did not complete (interrupted
@@ -80,7 +80,7 @@ final case class CommitTask(
 final class GraftProcessor[T](
     val config: ProcessorConfig,
     processor: RecordProcessor[T],
-    client: SourceClient,
+    client: IndexedSourceClient,
     store: CheckpointStore,
     sink: EventSink = EventSink.Noop,
     onItems: (Dataset[T], Long) => Unit =
@@ -100,12 +100,8 @@ final class GraftProcessor[T](
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // R4: client-internal throttle retry, bound from config.maxRetries
     // (`client.rs:195-229`, threaded like `processor.rs:352,377`).
-    val effectiveClient = client match {
-      case i: graft.sources.IndexedSourceClient =>
-        new graft.sources.IndexedThrottleRetryingClient(i, config.maxRetries.getOrElse(3))
-      case c => new graft.sources.ThrottleRetryingClient(c, config.maxRetries.getOrElse(3))
-    }
-    SourceClientRegistry.register(instanceId, effectiveClient)
+    SourceClientRegistry.register(instanceId,
+      new IndexedThrottleRetryingClient(client, config.maxRetries.getOrElse(3)))
     CheckpointStoreRegistry.register(instanceId, store)
 
     val reader = spark.readStream.format("graft-stream")
@@ -137,7 +133,7 @@ final class GraftProcessor[T](
     // keys) in factorySpec; credentials belong behind an opaque handle
     // the factory resolves executor-side (env, instance profile, vault).
     client match {
-      case fc: graft.sources.FactoryConstructible =>
+      case fc: FactoryConstructible =>
         val (cls, conf) = fc.factorySpec
         reader.option("clientFactory", cls)
         conf.foreach { case (k, v) => reader.option(s"clientconf.$k", v) }
@@ -151,7 +147,7 @@ final class GraftProcessor[T](
     val capped = config.maxConcurrentShards.fold(raw)(raw.coalesce)
 
     capped.writeStream
-      .queryName(s"graft-${config.streamName}")
+      .queryName(s"graft-$instanceId") // unique: processors may share a stream name
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch((batch: Dataset[KRecord], batchId: Long) => runBatch(batch, batchId))
       .trigger(trigger)

@@ -8,7 +8,7 @@ import graft.processor.{RecordProcessing, RecordProcessor}
 
 /** End-to-end sample of the processor surface, as a library user writes it:
   * events.parquet → KRecord envelope stream → RecordProcessor (decode +
-  * filter + soft-retry + hard dead-letter) → per-shard batch results.
+  * filter + soft-retry + hard dead-letter) → per-shard monitoring metrics.
   * Run: sbt "runMain graft.examples.ProcessorDemo [sfDir]" */
 object ProcessorDemo {
 
@@ -63,7 +63,6 @@ object ProcessorDemo {
       s"deadLetters=${out.filter(_.failed).count()} " +
       s"retried=${out.filter(_.attempts > 0).count()}")
     out.filter(p => p.failed || p.attempts > 0).show(5, truncate = false)
-    RecordProcessing.batchResults(out).orderBy("shardId").show(10, truncate = false)
     aggregator.snapshot.toSeq.sortBy(_._1).foreach { case (shard, m) =>
       println(f"$shard%-9s processed=${m.recordsProcessed}%4d failed=${m.recordsFailed} " +
         f"soft=${m.softErrors} retries=${m.retryAttempts} avg=${m.avgProcessingTimeMs}%.2fms")

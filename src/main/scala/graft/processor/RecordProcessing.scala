@@ -19,16 +19,6 @@ final case class Processed[T](
     error: Option[String]
 )
 
-/** Per-shard batch fold result — T4, mirroring `BatchProcessingResult`
-  * (`processor.rs:325-333`). */
-final case class ShardBatchResult(
-    shardId: String,
-    successfulCount: Long,
-    failedCount: Long,
-    lastSuccessfulSequence: Option[String],
-    failedSequences: Seq[String]
-)
-
 /** T3 — drives [[RecordProcessor.processRecord]] with the reference's exact
   * retry semantics (`/root/reference/src/processor.rs:1481-1525`):
   *
@@ -141,26 +131,6 @@ object RecordProcessing {
         // unless explicitly hard.
         Left(ProcessingError.SoftFailure(e.getMessage, e))
     }
-  }
-
-  /** T4 — fold per-record outcomes into per-shard batch results
-    * (`processor.rs:1542-1560`): success/failure counts and the LAST
-    * successful sequence (sequence strings are zero-padded by every source
-    * in this engine, so lexicographic max == latest). Distributed: a single
-    * partial+final aggregation, no driver-side iteration. */
-  def batchResults[T](processed: Dataset[Processed[T]]): Dataset[ShardBatchResult] = {
-    val spark = processed.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    processed
-      .groupBy(col("shardId"))
-      .agg(
-        sum(when(col("failed"), 0L).otherwise(1L)).as("successfulCount"),
-        sum(when(col("failed"), 1L).otherwise(0L)).as("failedCount"),
-        max(when(!col("failed"), col("sequenceNumber"))).as("lastSuccessfulSequence"),
-        sort_array(collect_list(when(col("failed"), col("sequenceNumber"))))
-          .as("failedSequences"))
-      .as[ShardBatchResult]
   }
 
   private def event(shardId: String, et: ProcessingEventType): ProcessingEvent =

@@ -28,8 +28,9 @@ trait RecordProcessor[T] extends Serializable {
 
   /** T2 — pre-checkpoint validation hook over the batch's produced items
     * (`processor.rs:169-175`). Default no-op. Soft error → the commit
-    * harness re-validates forever; Hard error → logged and the checkpoint
-    * proceeds anyway (`processor.rs:1561-1606`). */
+    * harness re-validates forever; Hard error → the shard's checkpoint is
+    * NOT saved and the micro-batch fails, so its records are re-delivered
+    * (`processor.rs:1561-1606`; see [[graft.engine.GraftProcessor]]). */
   def beforeCheckpoint(
       items: Seq[T],
       metadata: CheckpointMetadata): Either[BeforeCheckpointError, Unit] = Right(())

@@ -192,17 +192,13 @@ final class GraftMicroBatchStream(opts: GraftSourceOptions)
           case InitialPosition.AtTimestamp(t) => ShardIteratorType.AtTimestamp(t)
         }
       }
-      val cursorIdx = cursorIndex(c.getShardIterator(opts.streamName, s.shardId, iteratorType))
+      val cursorIdx = c.indexOfIterator(opts.streamName, s.shardId,
+        c.getShardIterator(opts.streamName, s.shardId, iteratorType))
       emit(s.shardId, ProcessingEventType.Iterator(IteratorEventType.Initial, None))
       s.shardId -> cursorIdx
     }.toMap
     GraftOffset(positions)
   }
-
-  /** In-memory cursors are `shard#index`; the index suffix is the engine's
-    * canonical position. */
-  private def cursorIndex(cursor: String): Long =
-    cursor.substring(cursor.lastIndexOf('#') + 1).toLong
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 

@@ -203,12 +203,6 @@ final class FileShardClient(val dir: String)
   private def recs(shardId: String): IndexedSeq[KRecord] =
     ShardedCorpus.loadShard(dir, shardId)
 
-  private def cursor(shardId: String, idx: Long): String = s"$shardId#$idx"
-  private def parse(it: String): (String, Long) = {
-    val i = it.lastIndexOf('#')
-    (it.substring(0, i), it.substring(i + 1).toLong)
-  }
-
   override def listShards(streamName: String): Seq[ShardInfo] =
     counts.keys.toSeq.sorted.map(ShardInfo)
 
@@ -216,41 +210,19 @@ final class FileShardClient(val dir: String)
     counts.getOrElse(shardId, 0L)
 
   override def iteratorAtIndex(streamName: String, shardId: String, index: Long): String =
-    cursor(shardId, index)
+    ShardCursor(shardId, index)
 
   override def indexOfIterator(streamName: String, shardId: String, iterator: String): Long =
-    parse(iterator)._2
+    ShardCursor.indexOf(iterator)
 
   override def getShardIterator(streamName: String, shardId: String,
-      iteratorType: ShardIteratorType): String = iteratorType match {
-    case ShardIteratorType.TrimHorizon => cursor(shardId, 0L)
-    case ShardIteratorType.Latest => cursor(shardId, shardLength(streamName, shardId))
-    case ShardIteratorType.AtSequenceNumber(seq) =>
-      val rs = recs(shardId)
-      val i = rs.indexWhere(_.sequenceNumber >= seq)
-      cursor(shardId, if (i < 0) rs.length.toLong else i.toLong)
-    case ShardIteratorType.AfterSequenceNumber(seq) =>
-      val rs = recs(shardId)
-      val i = rs.indexWhere(_.sequenceNumber > seq)
-      cursor(shardId, if (i < 0) rs.length.toLong else i.toLong)
-    case ShardIteratorType.AtTimestamp(ts) =>
-      val rs = recs(shardId)
-      val millis = ts.toEpochMilli
-      val i = rs.indexWhere(_.approximateArrivalTimestamp.exists(_.getTime >= millis))
-      cursor(shardId, if (i < 0) rs.length.toLong else i.toLong)
-  }
+      iteratorType: ShardIteratorType): String =
+    ShardCursor(shardId,
+      ShardCursor.seek(iteratorType, recs(shardId), shardLength(streamName, shardId)))
 
   override def getRecords(iterator: String, limit: Int): GetRecordsResult = {
-    val (shardId, idx) = parse(iterator)
-    val rs = recs(shardId)
-    // loud failure instead of a silently wrapped slice past Int.MaxValue
-    // (in-memory IndexedSeq shards can't exceed Int range anyway)
-    val from = math.toIntExact(idx)
-    val until = math.toIntExact(math.min(idx + limit, rs.length.toLong))
-    val slice = rs.slice(from, until)
-    val nextIdx = idx + slice.length
-    val next = if (nextIdx >= rs.length) None else Some(cursor(shardId, nextIdx))
-    GetRecordsResult(slice, next)
+    val shardId = ShardCursor.shardOf(iterator)
+    ShardCursor.page(shardId, recs(shardId), 0L, ShardCursor.indexOf(iterator), limit)
   }
 }
 

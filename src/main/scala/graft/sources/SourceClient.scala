@@ -47,7 +47,6 @@ trait SourceClient extends Serializable {
 class ThrottleRetryingClient(
     underlying: SourceClient,
     maxRetries: Int = 3,
-    baseDelayMs: Long = 100L,
     sleep: Long => Unit = Thread.sleep
 ) extends SourceClient {
   override def listShards(streamName: String): Seq[ShardInfo] = underlying.listShards(streamName)
@@ -63,7 +62,7 @@ class ThrottleRetryingClient(
         case e: SourceClientError =>
           if (retry >= maxRetries) throw e
           retry += 1
-          sleep(baseDelayMs * (1L << (retry - 1)))
+          sleep(100L * (1L << (retry - 1)))
       }
     }
     sys.error("unreachable")
@@ -113,9 +112,8 @@ trait FactoryConstructible { this: SourceClient =>
   * micro-batch source requires it). */
 final class IndexedThrottleRetryingClient(
     underlying: IndexedSourceClient,
-    maxRetries: Int = 3,
-    baseDelayMs: Long = 100L
-) extends ThrottleRetryingClient(underlying, maxRetries, baseDelayMs) with IndexedSourceClient {
+    maxRetries: Int = 3
+) extends ThrottleRetryingClient(underlying, maxRetries) with IndexedSourceClient {
   override def shardLength(streamName: String, shardId: String): Long =
     underlying.shardLength(streamName, shardId)
   override def iteratorAtIndex(streamName: String, shardId: String, index: Long): String =
@@ -172,59 +170,34 @@ class InMemorySourceClient(
     val shards: Map[String, IndexedSeq[KRecord]]
 ) extends IndexedSourceClient {
 
+  private def recs(shardId: String): IndexedSeq[KRecord] =
+    shards.getOrElse(shardId, throw SourceClientError.Other(s"unknown shard $shardId"))
+
   override def shardLength(streamName: String, shardId: String): Long =
     shards.get(shardId).fold(0L)(_.length.toLong)
 
   override def iteratorAtIndex(streamName: String, shardId: String, index: Long): String =
-    cursor(shardId, index.toInt)
+    ShardCursor(shardId, index)
 
   override def indexOfIterator(streamName: String, shardId: String, iterator: String): Long =
-    parseCursor(iterator)._2.toLong
+    ShardCursor.indexOf(iterator)
 
   override def embeddableRecords(streamName: String, shardId: String,
       start: Long, end: Long): Option[IndexedSeq[KRecord]] =
     Some(shards.getOrElse(shardId, IndexedSeq.empty).slice(start.toInt, end.toInt))
-
-  protected def cursor(shardId: String, idx: Int): String = s"$shardId#$idx"
-  protected def parseCursor(it: String): (String, Int) = {
-    val i = it.lastIndexOf('#')
-    (it.substring(0, i), it.substring(i + 1).toInt)
-  }
 
   override def listShards(streamName: String): Seq[ShardInfo] =
     shards.keys.toSeq.sorted.map(ShardInfo)
 
   override def getShardIterator(streamName: String, shardId: String,
       iteratorType: ShardIteratorType): String = {
-    val recs = shards.getOrElse(shardId,
-      throw SourceClientError.Other(s"unknown shard $shardId"))
-    iteratorType match {
-      case ShardIteratorType.TrimHorizon => cursor(shardId, 0)
-      case ShardIteratorType.Latest => cursor(shardId, recs.length)
-      case ShardIteratorType.AtSequenceNumber(seq) =>
-        // A sequence past every record positions at end-of-shard (like the
-        // AfterSequenceNumber arm) — never silently at TrimHorizon, which
-        // would replay the whole shard.
-        val i = recs.indexWhere(_.sequenceNumber >= seq)
-        cursor(shardId, if (i < 0) recs.length else i)
-      case ShardIteratorType.AfterSequenceNumber(seq) =>
-        val i = recs.indexWhere(_.sequenceNumber > seq)
-        cursor(shardId, if (i < 0) recs.length else i)
-      case ShardIteratorType.AtTimestamp(ts) =>
-        val millis = ts.toEpochMilli
-        val i = recs.indexWhere(_.approximateArrivalTimestamp.exists(_.getTime >= millis))
-        cursor(shardId, if (i < 0) recs.length else i)
-    }
+    val rs = recs(shardId)
+    ShardCursor(shardId, ShardCursor.seek(iteratorType, rs, rs.length.toLong))
   }
 
   override def getRecords(iterator: String, limit: Int): GetRecordsResult = {
-    val (shardId, idx) = parseCursor(iterator)
-    val recs = shards.getOrElse(shardId,
-      throw SourceClientError.Other(s"unknown shard $shardId"))
-    val slice = recs.slice(idx, idx + limit)
-    val nextIdx = idx + slice.length
-    val next = if (nextIdx >= recs.length) None else Some(cursor(shardId, nextIdx))
-    GetRecordsResult(slice, next)
+    val shardId = ShardCursor.shardOf(iterator)
+    ShardCursor.page(shardId, recs(shardId), 0L, ShardCursor.indexOf(iterator), limit)
   }
 }
 
@@ -281,43 +254,71 @@ object SourceClientRegistry {
 final class SliceBackedClient(shardId: String, base: Long, recs: IndexedSeq[KRecord])
     extends IndexedSourceClient {
 
-  private def cursor(idx: Long): String = s"$shardId#$idx"
-  private def idxOf(it: String): Long = it.substring(it.lastIndexOf('#') + 1).toLong
-
   override def listShards(streamName: String): Seq[ShardInfo] = Seq(ShardInfo(shardId))
   override def shardLength(streamName: String, shardId: String): Long = base + recs.length
   override def iteratorAtIndex(streamName: String, shardId: String, index: Long): String = {
     if (index < base || index > base + recs.length)
       throw SourceClientError.Other(
         s"index $index outside embedded range [$base, ${base + recs.length}] of $shardId")
-    cursor(index)
+    ShardCursor(shardId, index)
   }
   override def indexOfIterator(streamName: String, shardId: String, iterator: String): Long =
-    idxOf(iterator)
+    ShardCursor.indexOf(iterator)
 
   /** O7 ladder rungs resolve within the slice; a sequence before/after the
     * range anchors at its edges (the reader clamps to its own cursor). */
   override def getShardIterator(streamName: String, sid: String,
-      iteratorType: ShardIteratorType): String = iteratorType match {
-    case ShardIteratorType.TrimHorizon => cursor(base)
-    case ShardIteratorType.Latest => cursor(base + recs.length)
-    case ShardIteratorType.AtSequenceNumber(seq) =>
-      val i = recs.indexWhere(_.sequenceNumber >= seq)
-      cursor(if (i < 0) base + recs.length else base + i)
-    case ShardIteratorType.AfterSequenceNumber(seq) =>
-      val i = recs.indexWhere(_.sequenceNumber > seq)
-      cursor(if (i < 0) base + recs.length else base + i)
-    case ShardIteratorType.AtTimestamp(ts) =>
-      val millis = ts.toEpochMilli
-      val i = recs.indexWhere(_.approximateArrivalTimestamp.exists(_.getTime >= millis))
-      cursor(if (i < 0) base + recs.length else base + i)
+      iteratorType: ShardIteratorType): String =
+    ShardCursor(shardId, base + ShardCursor.seek(iteratorType, recs, recs.length.toLong))
+
+  override def getRecords(iterator: String, limit: Int): GetRecordsResult =
+    ShardCursor.page(shardId, recs, base, ShardCursor.indexOf(iterator), limit)
+}
+
+/** The one owner of the `shard#index` cursor format every indexed client
+  * in this package speaks, of the [[ShardIteratorType]] → record-index
+  * seek, and of the paged `getRecords` slice. */
+private[sources] object ShardCursor {
+
+  def apply(shardId: String, index: Long): String = s"$shardId#$index"
+
+  def shardOf(cursor: String): String = cursor.substring(0, cursor.lastIndexOf('#'))
+
+  def indexOf(cursor: String): Long = cursor.substring(cursor.lastIndexOf('#') + 1).toLong
+
+  /** Index within `recs` that `iteratorType` points at. `length` answers
+    * Latest (a client may know it without loading the records); a position
+    * past every record is end-of-shard, never TrimHorizon, which would
+    * replay the whole shard. The match is a linear first match: shards are
+    * ordered by arrival, so sequence numbers need not be monotone. */
+  def seek(iteratorType: ShardIteratorType, recs: => IndexedSeq[KRecord],
+      length: => Long): Long = {
+    lazy val rs = recs
+    def orEnd(i: Int): Long = if (i < 0) rs.length.toLong else i.toLong
+    iteratorType match {
+      case ShardIteratorType.TrimHorizon => 0L
+      case ShardIteratorType.Latest => length
+      case ShardIteratorType.AtSequenceNumber(seq) =>
+        orEnd(rs.indexWhere(_.sequenceNumber >= seq))
+      case ShardIteratorType.AfterSequenceNumber(seq) =>
+        orEnd(rs.indexWhere(_.sequenceNumber > seq))
+      case ShardIteratorType.AtTimestamp(ts) =>
+        val millis = ts.toEpochMilli
+        orEnd(rs.indexWhere(_.approximateArrivalTimestamp.exists(_.getTime >= millis)))
+    }
   }
 
-  override def getRecords(iterator: String, limit: Int): GetRecordsResult = {
-    val local = (idxOf(iterator) - base).toInt
-    val slice = recs.slice(local, local + limit)
-    val nextLocal = local + slice.length
-    val next = if (nextLocal >= recs.length) None else Some(cursor(base + nextLocal))
-    GetRecordsResult(slice, next)
+  /** One page of at most `limit` records from absolute `index`, where
+    * `recs(0)` is the record at absolute index `base`; the next cursor is
+    * None at the end of `recs`. An index past Int range fails loudly
+    * instead of wrapping the slice. */
+  def page(shardId: String, recs: IndexedSeq[KRecord], base: Long, index: Long,
+      limit: Int): GetRecordsResult = {
+    val from = index - base
+    val slice = recs.slice(math.toIntExact(from),
+      math.toIntExact(math.min(from + limit, recs.length.toLong)))
+    val next = from + slice.length
+    GetRecordsResult(slice,
+      if (next >= recs.length) None else Some(apply(shardId, base + next)))
   }
 }

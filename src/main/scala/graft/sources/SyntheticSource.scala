@@ -68,8 +68,6 @@ final class SyntheticSourceClient(numShards: Int, recordsPerShard: Long)
   private val types = Vector("click", "view", "purchase", "share", "error")
 
   private def shardName(i: Int): String = s"shard-$i"
-  private def cursor(shardId: String, idx: Long): String = s"$shardId#$idx"
-  private def idxOf(it: String): Long = it.substring(it.lastIndexOf('#') + 1).toLong
 
   private def record(shardId: String, idx: Long): KRecord = {
     // cheap deterministic mix (splitmix-style) — stable across JVMs
@@ -84,28 +82,28 @@ final class SyntheticSourceClient(numShards: Int, recordsPerShard: Long)
     (0 until numShards).map(i => ShardInfo(shardName(i)))
   override def shardLength(streamName: String, shardId: String): Long = recordsPerShard
   override def iteratorAtIndex(streamName: String, shardId: String, index: Long): String =
-    cursor(shardId, index)
+    ShardCursor(shardId, index)
   override def indexOfIterator(streamName: String, shardId: String, iterator: String): Long =
-    idxOf(iterator)
+    ShardCursor.indexOf(iterator)
 
   override def getShardIterator(streamName: String, shardId: String,
       iteratorType: ShardIteratorType): String = iteratorType match {
-    case ShardIteratorType.TrimHorizon => cursor(shardId, 0L)
-    case ShardIteratorType.Latest => cursor(shardId, recordsPerShard)
+    case ShardIteratorType.TrimHorizon => ShardCursor(shardId, 0L)
+    case ShardIteratorType.Latest => ShardCursor(shardId, recordsPerShard)
     case ShardIteratorType.AtSequenceNumber(seq) =>
-      cursor(shardId, math.min(seq.toLong, recordsPerShard))
+      ShardCursor(shardId, math.min(seq.toLong, recordsPerShard))
     case ShardIteratorType.AfterSequenceNumber(seq) =>
-      cursor(shardId, math.min(seq.toLong + 1, recordsPerShard))
+      ShardCursor(shardId, math.min(seq.toLong + 1, recordsPerShard))
     case ShardIteratorType.AtTimestamp(_) =>
       throw SourceClientError.Other("synthetic source has no arrival timestamps")
   }
 
   override def getRecords(iterator: String, limit: Int): GetRecordsResult = {
-    val shardId = iterator.substring(0, iterator.lastIndexOf('#'))
-    val idx = idxOf(iterator)
+    val shardId = ShardCursor.shardOf(iterator)
+    val idx = ShardCursor.indexOf(iterator)
     val end = math.min(idx + limit, recordsPerShard)
     val recs = (idx until end).map(i => record(shardId, i))
-    val next = if (end >= recordsPerShard) None else Some(cursor(shardId, end))
+    val next = if (end >= recordsPerShard) None else Some(ShardCursor(shardId, end))
     GetRecordsResult(recs, next)
   }
 }

@@ -45,10 +45,9 @@ final case class KinesisApiException(code: String, msg: String)
   * translation, per-JVM factory construction — is implemented and
   * spec-gated HERE; the only absent piece is the SDK transport behind
   * [[KinesisApi]], reflectively loaded from `conf("apiClass")` so this
-  * repo carries no SDK import. Wrap it exactly like every other client:
-  * `new ThrottleRetryingClient(new KinesisSourceClient(...))` gives the
-  * reference's R4 throttle retry, and the engine's O7 ladder owns
-  * expiry renewal.
+  * repo carries no SDK import. `new ThrottleRetryingClient(new
+  * KinesisSourceClient(...))` (what [[KinesisSourceClientFactory]]
+  * builds) adds the reference's R4 throttle retry.
   *
   * Error mapping (reference `src/client.rs:174-232`):
   *   - `ProvisionedThroughputExceededException`, `LimitExceededException`
@@ -60,11 +59,13 @@ final case class KinesisApiException(code: String, msg: String)
   *   - anything else → [[SourceClientError.Other]].
   *
   * NOTE: real Kinesis offsets are opaque sequence numbers, so this
-  * adapter is a plain [[SourceClient]] (poll-loop shape), not an
-  * [[IndexedSourceClient]] — the documented contract split at
-  * `SourceClient.scala` (IndexedSourceClient's exactly-replayable
-  * planned ranges are the parquet/file-stream strength; a Kinesis
-  * deployment runs the engine loop's at-least-once path instead). */
+  * adapter is a plain [[SourceClient]], not an [[IndexedSourceClient]],
+  * and the engine cannot run on it yet: the `graft-stream` micro-batch
+  * source plans exactly-replayable index ranges and accepts only an
+  * [[IndexedSourceClient]] (naming [[KinesisSourceClientFactory]] in its
+  * `clientFactory` option fails with a message saying so). Feeding the
+  * engine from Kinesis needs a sequence-number offset model that does
+  * not exist here. */
 final class KinesisSourceClient(conf: Map[String, String])
     extends SourceClient with FactoryConstructible {
 
@@ -136,8 +137,8 @@ final class KinesisSourceClient(conf: Map[String, String])
 
 /** Per-JVM factory for the `clientFactory`/`clientconf.*` DSv2 seam
   * (LocalClusterSpec proves the construction path multi-JVM). */
-final class KinesisSourceClientFactory {
-  def build(conf: Map[String, String]): SourceClient =
+final class KinesisSourceClientFactory extends SourceClientFactory {
+  override def build(conf: Map[String, String]): SourceClient =
     new ThrottleRetryingClient(new KinesisSourceClient(conf),
       maxRetries = conf.getOrElse("maxRetries", "3").toInt)
 }

@@ -61,6 +61,21 @@ class StageCacheSpec extends AnyFunSuite with Matchers with SparkSpec {
     attempts.get() shouldBe 2
   }
 
+  test("a getOrBuild nested in another's build works when both keys share a map bin") {
+    import spark.implicits._
+    // ConcurrentHashMap bins by the low bits of h ^ (h >>> 16): equal low
+    // 16 bits put both keys in one bin of any table up to 2^16 bins, where
+    // a nested computeIfAbsent throws "Recursive update"
+    def bin(key: String): Int = { val h = (spark, key).hashCode; (h ^ (h >>> 16)) & 0xffff }
+    val outer = "spec:nested-outer"
+    val inner = Iterator.from(0).map(i => s"spec:nested-inner-$i").find(bin(_) == bin(outer)).get
+    val staged = StageCache.getOrBuild(spark, outer) {
+      StageCache.getOrBuild(spark, inner)(Seq(7L).toDF("v")).selectExpr("v", "v + 1 AS w")
+    }
+    staged.collect().map(r => (r.getLong(0), r.getLong(1))) shouldBe Array((7L, 8L))
+    StageCache.getOrBuild(spark, inner)(sys.error("inner staged once")).count() shouldBe 1L
+  }
+
   test("staged graph/kn/bpe stages equal their inline builds (value identity)") {
     val sf = "/root/testdata/sf0.001"
     // e9: staged vs direct inline build

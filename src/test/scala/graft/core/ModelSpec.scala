@@ -17,17 +17,12 @@ class ModelSpec extends AnyFunSuite {
   test("defaults mirror the reference (processor.rs:369-387, monitoring/types.rs:27-36)") {
     val c = ProcessorConfig("stream")
     assert(c.batchSize == 100)
-    assert(c.apiTimeoutMs == 30000L)
     assert(c.processingTimeoutMs == 300000L)
     assert(c.totalTimeoutMs.isEmpty)
     assert(c.initialPosition == InitialPosition.TrimHorizon)
     assert(c.preferStoredCheckpoint)
     assert(c.minimumBatchRetrievalTimeMs == 100L)
     assert(c.maxBatchRetrievalLoops.contains(10))
-    assert(!c.monitoring.enabled)
-    assert(c.monitoring.channelSize == 1000)
-    assert(c.monitoring.metricsIntervalMs == 60000L)
-    assert(c.monitoring.rateLimitPerSecond.contains(1000))
   }
 
   test("soft/hard failure taxonomy is disjoint and typed") {
@@ -73,25 +68,17 @@ class StoreSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "app1-shard-1.ckpt")))
   }
 
-  test("retrying store: bounded-retry save surfaces failure by default; swallow is opt-in (store/dynamodb.rs:173-182)") {
-    var swallowed = 0
+  test("retrying store: bounded-retry save surfaces failure (dynamodb.rs:173-182)") {
     val failing = new CheckpointStore {
       def getCheckpoint(s: String): Option[String] = Some("g")
       def saveCheckpoint(s: String, n: String): Unit = sys.error("dynamo down")
     }
-    // default: surface the exhaustion so the commit harness can convert it
-    // into a soft error retried until success (processor.rs:1620-1626)
+    // surface the exhaustion so the commit harness can convert it into a
+    // soft error retried until success (processor.rs:1620-1626)
     intercept[CheckpointError] {
       new RetryingCheckpointStore(failing, RetryConfig(Some(2), FixedBackoff(1)))
         .saveCheckpoint("s", "1")
     }
-    // opt-in policy: the reference's warn-and-continue
-    val swallowing = new RetryingCheckpointStore(failing,
-      RetryConfig(Some(2), FixedBackoff(1)),
-      swallowBoundedFailure = true,
-      onSwallowedError = (_, _) => swallowed += 1)
-    swallowing.saveCheckpoint("s", "1") // must NOT throw
-    assert(swallowed == 1)
   }
 
   test("config validation rejects invalid initial positions (processor.rs:1701-1717)") {

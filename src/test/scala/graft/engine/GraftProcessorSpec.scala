@@ -215,6 +215,22 @@ class GraftProcessorSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
+  test("two processors on one stream name run at once: each query has its own name") {
+    val s = spark; import s.implicits._
+    val gps = (1 to 2).map(_ => new GraftProcessor[String](ProcessorConfig("events"), new Echo,
+      new InMemorySourceClient(mkShards(1, 10)), new InMemoryCheckpointStore))
+    val queries = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.streaming.StreamingQuery]
+    try {
+      gps.foreach(gp => queries += gp.start(spark, tmp(), Trigger.ProcessingTime(100L)))
+      queries.map(_.isActive) shouldBe Seq(true, true)
+      queries.map(_.name).distinct.length shouldBe 2
+      queries.foreach(_.name should startWith("graft-events"))
+    } finally {
+      queries.foreach(_.stop())
+      gps.foreach(_.cleanup())
+    }
+  }
+
   test("minimum_batch_retrieval_time maps to the continuous trigger interval (SURVEY §4)") {
     GraftProcessor.continuousTrigger(
       ProcessorConfig("t", minimumBatchRetrievalTimeMs = 250L)) shouldBe

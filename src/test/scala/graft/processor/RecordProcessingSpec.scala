@@ -71,14 +71,9 @@ class RecordProcessingSpec extends AnyFunSuite with Matchers with SparkSpec {
     val out = processed.collect()
     out.count(_.failed) shouldBe 1
     out.find(_.failed).get.sequenceNumber shouldBe "0000000002"
-
-    val batch = RecordProcessing.batchResults(processed).collect()
-    batch.length shouldBe 1
-    batch.head.successfulCount shouldBe 4
-    batch.head.failedCount shouldBe 1
-    // checkpoint advances past the failed record (reference §3.2)
-    batch.head.lastSuccessfulSequence shouldBe Some("0000000005")
-    batch.head.failedSequences shouldBe Seq("0000000002")
+    // the batch continues past the dead letter; GraftProcessorSpec's "hard
+    // failures dead-letter; checkpoint advances past them" covers the commit
+    out.filterNot(_.failed).map(_.sequenceNumber).max shouldBe "0000000005"
   }
 
   test("per-attempt timeout is shard-fatal (processor.rs:1520-1522)") {

@@ -3,9 +3,11 @@ package graft.sources
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import graft.SparkSpec
 import graft.core.{KRecord, RetryConfig, RetryingCheckpointStore, ShardIteratorType}
 import graft.core.aws.{DynamoApi, DynamoCheckpointStore}
 import graft.sources.aws._
@@ -19,7 +21,7 @@ import graft.sources.aws._
   * tested engine code. A networked deployment adds only the SDK-backed
   * `KinesisApi`/`DynamoApi` classes.
   */
-class AwsAdapterSpec extends AnyFunSuite with Matchers {
+class AwsAdapterSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private def client(extra: (String, String)*): KinesisSourceClient =
     new KinesisSourceClient(
@@ -78,6 +80,27 @@ class AwsAdapterSpec extends AnyFunSuite with Matchers {
     // expiry is fail-fast THROUGH the retry wrapper (O7 owns renewal)
     FakeKinesisApi.script(KinesisApiException("ExpiredIteratorException", "e"))
     intercept[SourceClientError.ExpiredIterator](built.getRecords("it", 10))
+  }
+
+  test("the factory is a SourceClientFactory: clientFor builds the Kinesis client") {
+    FakeKinesisApi.reset()
+    val c = SourceClientFactory.clientFor(classOf[KinesisSourceClientFactory].getName,
+      Map("apiClass" -> classOf[FakeKinesisApi].getName, "spec" -> "clientFor"))
+    c shouldBe a[ThrottleRetryingClient]
+    c.listShards("s").length shouldBe 5
+  }
+
+  test("a graft-stream read on the Kinesis factory fails naming the IndexedSourceClient requirement") {
+    FakeKinesisApi.reset()
+    val q = spark.readStream.format("graft-stream")
+      .option("clientFactory", classOf[KinesisSourceClientFactory].getName)
+      .option("clientconf.apiClass", classOf[FakeKinesisApi].getName)
+      .load().writeStream.format("noop")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft-kinesis-read").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    val e = intercept[StreamingQueryException](q.awaitTermination(60000L))
+    e.getMessage should include("must be an IndexedSourceClient")
   }
 
   test("a missing apiClass fails loudly at construction, not at first call") {
