@@ -15,6 +15,10 @@ enforce, hard-failing like `cargo fmt --check` does:
     leave alone or that are inherently atomic here: import lines,
     test("...") titles, triple-quoted literals, and `|`-margin lines
     inside embedded oracle SQL
+  - no `SparkSession.builder()` outside src/main/scala/graft/GraftSession.scala:
+    every session, in the program and in its specs, starts from
+    `graft.GraftSession.builder`, so the session settings the results
+    depend on live in one module
 
 Exit 1 with a per-violation listing on any hit; exit 0 clean.
 """
@@ -22,6 +26,8 @@ import glob
 import sys
 
 MAX_COLS = 120
+SESSION_BUILDER = "SparkSession.builder()"
+SESSION_MODULE = "src/main/scala/graft/GraftSession.scala"
 
 
 def exempt(line: str) -> bool:
@@ -50,6 +56,9 @@ def main() -> int:
                 bad.append(f"{f}:{n}: tab character")
             if len(line) > MAX_COLS and not exempt(line):
                 bad.append(f"{f}:{n}: {len(line)} cols (max {MAX_COLS})")
+            if SESSION_BUILDER in line and f.startswith("src/") and f != SESSION_MODULE:
+                bad.append(f"{f}:{n}: {SESSION_BUILDER} outside {SESSION_MODULE} "
+                           "(use graft.GraftSession.builder)")
     if bad:
         print(f"[fmtcheck] {len(bad)} violation(s):", file=sys.stderr)
         for b in bad:

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** One flat `"key":{"name":sec,...}` object out of a prior bench
     * artifact line. Regex over the machine-generated format — no JSON
@@ -279,12 +278,7 @@ object Bench {
         System.err.println(s"[bench] tmpdir probe failed: ${t.getMessage}"); false
       }
     }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val builder = GraftSession.builder(s"local[$cpus]", cpus.toInt)
     staged.foreach(r => builder.config("spark.local.dir",
       new java.io.File(r, "scratch").getAbsolutePath))
     val spark = builder.getOrCreate()

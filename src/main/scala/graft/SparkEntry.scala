@@ -27,91 +27,6 @@ object SparkEntry {
     * entries without any failure record) and only a human diffing entry
     * counts caught it. Verify hard-fails when `queries` falls below this;
     * bump it in the same commit that registers a new query. */
-  // r10: 149 → 148 — e7_knn_graph demoted to a spec-gated contrast
-  // (VERDICT r9 #3a); e9 is the production kNN-graph shape the gate
-  // measures. Then 148 → 149: s16_stream_reshard registered. Then
-  // 149 → 152: t17_dsir_importance, e11_two_stage_rerank,
-  // m7_scene_change registered. Then 152 → 153: s17_stream_ann_ingest.
-  // Then 153 → 155: d12_cdc_chunk_dedup, f7_compaction. Then 155 → 156:
-  // p20_pretrain_pipeline (the e2e composition flagship). Then 156 → 157:
-  // e12_refine_recall. Then 157 → 160: m8_voiced_segments,
-  // p21_token_budget_alloc, s18_stream_dsir_score. Then 160 → 162:
-  // t19_source_kl_audit, e13_filtered_ann. r11: 162 → 163:
-  // f8_keyed_merge (apply-changes/SCD1 MERGE sink). Then 163 → 164:
-  // s19_monitoring_metrics (M4 windowed fold under the hash gate).
-  // Then 164 → 165: t20_bm25_topk (exact-BIGINT BM25 probe retrieval).
-  // Then 165 → 166: e14_hybrid_rrf (BM25 + cosine reciprocal-rank fusion).
-  // Then 166 → 168: t21_bpe_merges (BPE vocabulary induction — K merge
-  // rounds on the word-frequency table, run-parity greedy-left rewrite)
-  // and t22_kn_surprisal (interpolated Kneser-Ney bigram scoring, q64
-  // log staging on the |vocab|² table only). Then 168 → 169:
-  // s20_stream_keyed_merge (streaming CDC apply through KeyedMerge —
-  // batching-invariant final state, restart-no-op). Then 169 → 170:
-  // e15_ivfpq_topk (IVF + residual product quantization + ADC — the
-  // FAISS IndexIVFPQ layout, completing the index family). Then
-  // 170 → 171: t23_bpe_fertility (apply t21's trained merges; per-source
-  // tokenizer fertility/compression audit). Then 171 → 172:
-  // s21_stream_drift_audit (bucketed per-source KL drift on a stream —
-  // O(|sources|·1024) state, t19's exact-BIGINT staging on the drain).
-  // Then 172 → 173: d13_softdedup_weights (duplicate-aware 1/n
-  // down-weighting over n4's clustering — keep-all-reweighted, the
-  // complement of n7's keep-best). Then 173 → 174: e16_ivfpq_recall
-  // (recall@5 of flat PQ vs IVF-PQ against brute truth — closes the
-  // recall-gate pattern over the index family). Then 174 → 175:
-  // m9_video_dedup (cross-video duplicate detection by ordered per-frame
-  // aHash fingerprints — the video member of the dedup family). Then
-  // 175 → 176: t24_perplexity_filter (CCNet-style per-source perplexity
-  // terciles over t22's KN scorer — THE model-based quality filter).
-  // Then 176 → 177: e17_graph_ann (greedy beam search over e9's
-  // reciprocal kNN graph — the HNSW/DiskANN family member, completing
-  // the ANN index families). Then 177 → 180: f9_snapshot_read
-  // (append-only versioned table + as-of time travel — reproducible
-  // training snapshots), m10_audio_dedup (energy-delta fingerprints —
-  // dedup now spans text/image/video/audio), p22_curriculum_schedule
-  // (two-phase anneal schedule: temperature-weighted main + head-only
-  // anneal, exact largest-remainder budgets over t24's terciles). Then
-  // 180 → 181: s22_stream_versioned_ingest (f9's streaming twin —
-  // batchId-keyed idempotent delta commits; f8↔s20 in-place merge,
-  // f9↔s22 versioned history). Then 181 → 183 (r12): f10_log_compaction
-  // (versioned-log maintenance fold — the Delta/Iceberg vacuum trade)
-  // and s23_stream_compacted_ingest (s22 + the live compaction loop).
-  // Then 183 → 187 (r12): e18_binary_ann (1-bit binary quantization +
-  // exact re-rank — the RAM-resident index tier, completing the
-  // compression family), e19_bq_recall (its recall audit, closing the
-  // recall-gate pattern's last member), q57_funnel (sequential
-  // conversion funnel — ordered-event-pattern aggregation), and
-  // m11_av_align (cross-modal as-of alignment of scene cuts to audio
-  // feature windows — the A/V synchronization step). Then 187 → 190
-  // (r12, second batch): q58_median_mode (native exact median +
-  // deterministic mode under the gate), f11_bucketed_join (catalog
-  // bucketBy layout — zero-hash-exchange aggregations and self-join),
-  // and t25_zipf_audit (token frequency-spectrum power-law audit via
-  // exact moment staging — window-free, no global rank). Then 190 → 192
-  // (r12, third batch): g3_triangle_count (degree-oriented triangle
-  // census + exact clustering coefficient on the co-purchase backbone
-  // graph, oracle-cross-checked by an independent id-canonical counting
-  // scheme) and q59_assoc_rules (market-basket support/confidence/lift
-  // as staged exact ppm integers, top-20 by lift). Then 192 → 195:
-  // t26_dup_ngram_fraction (Lee-et-al duplicated-8-gram exposure per
-  // source, 60-bit fingerprint shuffle keys), p23_repetition_alloc
-  // (Muennighoff data-constrained epoch allocator — staged Hamilton +
-  // exact geometric-decay yield), e20_incremental_ann (assign-only IVF
-  // append against a frozen base-trained codebook, provenance-flagged
-  // union search — the index-maintenance member of the ANN family).
-  // Then 195 → 198: d14_cross_source_dup (source×source duplication
-  // matrix — where duplicated text FLOWS between sources),
-  // e21_codebook_drift (recall decay of e20's frozen codebook vs e4's
-  // full rebuild against brute truth — the when-to-retrain audit),
-  // q60_percentile_native (SQL:2003 percentile_cont/percentile_disc
-  // WITHIN GROUP under the gate, first-principles oracle). Then
-  // 198 → 202 (r13): f12_snapshot_diff (change data feed between two
-  // table versions — one scan, zero joins via conditional double
-  // struct-argmax), s24_stream_change_feed (its streaming twin: CDF
-  // rows emitted against the raw keyed state while merging),
-  // e22_range_search (exact radius search with triangle-inequality IVF
-  // cell pruning, brute-force-oracle-gated), d15_lsh_calibration
-  // (empirical MinHash banding S-curve per Jaccard decile over a fixed
-  // calibration window).
   val expectedQueryCount: Int = 203
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -379,7 +379,8 @@ object Dedup {
 
   /** The (Σdf, Σdf²) profile aggregate the dispatch reads — Σdf² is also
     * the DIRECT strategy's exact candidate row volume, which the r11 sf30
-    * law attribution probes ([[graft.examples.ContainProbe]]). */
+    * law attribution probed (`graft.examples.ContainProbe`, a dev main
+    * since removed; commit a49360d is the last to have it). */
   private[graft] def containmentDfProfile(s: SparkSession, d: String): (Long, Long) = {
     val e = containmentIncidences(s, d)
     val st = e.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -424,7 +425,8 @@ object Dedup {
     * because a user-specified shuffle opts the join out of AQE's
     * skew-join splitting, and the trigram df distribution is exactly the
     * skew that optimization exists for. The sf30 residual (161 s on a
-    * provably ×3 row volume — ContainProbe pins Σdf² at exactly 3.0×)
+    * provably ×3 row volume — the removed ContainProbe, last in commit
+    * a49360d, pinned Σdf² at exactly 3.0×)
     * is single-JVM memory pressure on the 32-reducer pair aggregation,
     * recorded in SCALE.md; on a real cluster the same plan gets more
     * reducers from a production shuffle-partition default. */

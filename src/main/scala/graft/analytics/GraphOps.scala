@@ -108,8 +108,12 @@ object GraphOps {
     // session conf `spark.graft.pagerank.maxTypes` → 1024 (with ≤ cap
     // nodes the edge collect below is ≤ cap² rows of (str, str, long) —
     // bounded metadata in the KeyedMerge touched-bucket sense).
-    val maxTypes = s.conf.getOption("spark.graft.pagerank.maxTypes")
-      .map(_.toInt).getOrElse(1024)
+    val maxTypesKey = "spark.graft.pagerank.maxTypes"
+    val maxTypes = s.conf.getOption(maxTypesKey).fold(1024) { v =>
+      val n = v.trim.toIntOption.filter(_ > 0)
+      require(n.isDefined, s"g1 pagerank: $maxTypesKey must be a positive integer, got '$v'")
+      n.get
+    }
     val nodeRows = ev.select(col("event_type").as("etype")).distinct()
       .take(maxTypes + 1)
     require(nodeRows.length <= maxTypes,

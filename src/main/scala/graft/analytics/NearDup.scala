@@ -693,7 +693,8 @@ object NearDup {
     def shingle(arr: String): String =
       s"array_distinct(transform(sequence(1, size($arr) - 2), " +
         s"i -> concat_ws(' ', slice($arr, i, 3))))"
-    // r15 NEGATIVE RESULT (measured, graft.examples.Md5Probe): a native
+    // r15 NEGATIVE RESULT (measured with graft.examples.Md5Probe, a dev
+    // main since removed, last in commit a49360d): a native
     // one-pass md5 signature expression (bit-identical values) was tried
     // here and REVERTED — it made the entry 1.14 → 1.53 s at sf0.1.
     // Forced full-sig materialization costs 9.0 s interpreted / 1.4 s

@@ -43,8 +43,9 @@ object Tables {
     * loader pins the logical schema here instead of every query branching on
     * the file vintage. `unix_micros` on an LTZ timestamp returns the exact
     * stored integers independent of session timezone; the NTZ→LTZ cast is
-    * exact because every engine session sets `spark.sql.session.timeZone`
-    * to UTC. Pure projection — works on batch and streaming frames alike. */
+    * exact because every engine session comes from [[graft.GraftSession]],
+    * which sets `spark.sql.session.timeZone` to UTC. Pure projection —
+    * works on batch and streaming frames alike. */
   def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) => df // already epoch-nanos (nanosAsLong vintage)

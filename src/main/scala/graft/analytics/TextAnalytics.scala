@@ -1582,7 +1582,8 @@ object TextAnalytics {
     // interpreted transform(sequence(..), i -> conv(substring(md5(
     // concat_ws(' ', slice(ws, i, 8))), 1, 16), 16, -10)) chain, which
     // allocated a gram string + 32-char hex string + conv parse per gram
-    // instance (same-JVM A/B, graft.examples.Md5Probe at sf0.1: the
+    // instance (same-JVM A/B, graft.examples.Md5Probe at sf0.1 — a dev
+    // main since removed, last in commit a49360d: the
     // gram-sig pass alone 1.01 → 0.29 s; entry 1.66 → 1.10 s on the
     // measuring boot — and unlike d15, t26's fold consumes EVERY sig, so
     // nothing here short-circuits).

@@ -420,6 +420,45 @@ case class ShingleHashes(child: Expression, n: Int)
     copy(child = newChild)
 }
 
+/** The per-row loop [[ShingleMd5Hashes]] and [[ShingleMd5Sigs]] share: for
+  * every window of `n` consecutive words, the first 8 bytes (big-endian,
+  * signed) of the md5 of the window's words joined by single spaces. Word
+  * bytes are extracted once per row and streamed into the reused digest.
+  * A null word is skipped with its separator, as `concat_ws` does. */
+private[functions] object ShingleMd5 {
+  def prefixes(words: ArrayData, n: Int, md: java.security.MessageDigest): Array[Long] = {
+    val m = words.numElements()
+    if (m < n) return Array.emptyLongArray
+    val wb = new Array[Array[Byte]](m)
+    var i = 0
+    while (i < m) {
+      wb(i) = if (words.isNullAt(i)) null else words.getUTF8String(i).getBytes
+      i += 1
+    }
+    val out = new Array[Long](m - n + 1)
+    i = 0
+    while (i <= m - n) {
+      var j = i
+      var sep = false
+      while (j < i + n) {
+        if (wb(j) != null) {
+          if (sep) md.update(' '.toByte)
+          md.update(wb(j))
+          sep = true
+        }
+        j += 1
+      }
+      val d = md.digest() // digest() resets for the next shingle
+      var v = 0L
+      var k = 0
+      while (k < 8) { v = (v << 8) | (d(k) & 0xFFL); k += 1 }
+      out(i) = v
+      i += 1
+    }
+    out
+  }
+}
+
 /** `graft_shingle_md5_hashes(array<string>, n) → array<bigint>` — the
   * sorted DISTINCT 60-bit md5 prefixes (first 15 hex chars of the digest)
   * of word n-gram shingle strings (words joined by a single space): the
@@ -449,29 +488,10 @@ case class ShingleMd5Hashes(child: Expression, n: Int)
   override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
 
   def compute(words: ArrayData): GenericArrayData = {
-    val m = words.numElements()
-    if (m < n) return new GenericArrayData(Array.emptyLongArray)
-    val wb = new Array[Array[Byte]](m)
+    val out = ShingleMd5.prefixes(words, n, digest.get())
+    // first 15 hex chars = top 60 bits: the signed 64-bit prefix >>> 4
     var i = 0
-    while (i < m) { wb(i) = words.getUTF8String(i).getBytes; i += 1 }
-    val md = digest.get()
-    val out = new Array[Long](m - n + 1)
-    i = 0
-    while (i <= m - n) {
-      var j = i
-      while (j < i + n) {
-        md.update(wb(j))
-        if (j < i + n - 1) md.update(' '.toByte)
-        j += 1
-      }
-      val d = md.digest() // digest() resets for the next shingle
-      // first 15 hex chars = top 60 bits: big-endian first 8 bytes >>> 4
-      var v = 0L
-      var k = 0
-      while (k < 8) { v = (v << 8) | (d(k) & 0xFFL); k += 1 }
-      out(i) = v >>> 4
-      i += 1
-    }
+    while (i < out.length) { out(i) = out(i) >>> 4; i += 1 }
     java.util.Arrays.sort(out)
     // in-place dedupe of the sorted array
     var w = 0
@@ -499,12 +519,16 @@ case class ShingleMd5Hashes(child: Expression, n: Int)
   * interpreted `transform(toks, t -> conv(substring(md5(t), 1, 15), 16,
   * 10))` pipeline n5 used (engine-NEUTRAL hashes — DuckDB re-derives the
   * same values from `md5()`), but one tight per-row loop instead of a
-  * boxing lambda per token. */
+  * boxing lambda per token. A null token hashes to null, as `md5(NULL)`
+  * does, so the result holds nulls only when the input can. */
 case class Md5PrefixHashes(child: Expression)
     extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     GraftFunctions.requireTypes(prettyName, Seq(child), Seq(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = child.dataType match {
+    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
+    case _ => ArrayType(LongType, containsNull = false)
+  }
   override def prettyName: String = "graft_md5_prefix_hashes"
 
   // MessageDigest is stateful and not thread-safe; the expression object is
@@ -518,17 +542,22 @@ case class Md5PrefixHashes(child: Expression)
     val n = tokens.numElements()
     val out = new Array[Long](n)
     val md = digest.get()
+    var hasNull = false
     var i = 0
     while (i < n) {
-      val d = md.digest(tokens.getUTF8String(i).getBytes) // digest() resets
-      // first 15 hex chars = top 60 bits: big-endian first 8 bytes >>> 4
-      var v = 0L
-      var j = 0
-      while (j < 8) { v = (v << 8) | (d(j) & 0xFFL); j += 1 }
-      out(i) = v >>> 4
+      if (tokens.isNullAt(i)) hasNull = true
+      else {
+        val d = md.digest(tokens.getUTF8String(i).getBytes) // digest() resets
+        // first 15 hex chars = top 60 bits: big-endian first 8 bytes >>> 4
+        var v = 0L
+        var j = 0
+        while (j < 8) { v = (v << 8) | (d(j) & 0xFFL); j += 1 }
+        out(i) = v >>> 4
+      }
       i += 1
     }
-    new GenericArrayData(out)
+    if (!hasNull) new GenericArrayData(out)
+    else new GenericArrayData(Array.tabulate[Any](n)(k => if (tokens.isNullAt(k)) null else out(k)))
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -733,32 +762,9 @@ case class ShingleMd5Sigs(child: Expression, n: Int)
 
   override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
 
-  def compute(words: ArrayData): GenericArrayData = {
-    val m = words.numElements()
-    if (m < n) return new GenericArrayData(Array.emptyLongArray)
-    val wb = new Array[Array[Byte]](m)
-    var i = 0
-    while (i < m) { wb(i) = words.getUTF8String(i).getBytes; i += 1 }
-    val md = digest.get()
-    val out = new Array[Long](m - n + 1)
-    i = 0
-    while (i <= m - n) {
-      var j = i
-      while (j < i + n) {
-        md.update(wb(j))
-        if (j < i + n - 1) md.update(' '.toByte)
-        j += 1
-      }
-      val d = md.digest() // digest() resets for the next shingle
-      // first 16 hex chars = first 8 bytes big-endian, SIGNED (conv(.., 16, -10))
-      var v = 0L
-      var k = 0
-      while (k < 8) { v = (v << 8) | (d(k) & 0xFFL); k += 1 }
-      out(i) = v
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  // first 16 hex chars = first 8 bytes big-endian, SIGNED (conv(.., 16, -10))
+  def compute(words: ArrayData): GenericArrayData =
+    new GenericArrayData(ShingleMd5.prefixes(words, n, digest.get()))
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {

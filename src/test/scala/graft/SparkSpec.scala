@@ -8,14 +8,8 @@ import org.scalatest.Suite
   * with small shuffle partitioning (we test semantics here, not scale). */
 trait SparkSpec extends BeforeAndAfterAll { self: Suite =>
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(suiteName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.builder("local[4]", 4).appName(suiteName).getOrCreate()
 
   override def afterAll(): Unit = {
     try spark.stop()

@@ -35,14 +35,8 @@ class CacheEvictionGateSpec extends AnyFunSuite with Matchers
 
   // the full surface re-executes every registered plan: give it the
   // bench warm-up's parallelism rather than SparkSpec's local[4]
-  override lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName(suiteName)
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  override lazy val spark: SparkSession =
+    graft.GraftSession.builder("local[8]", 8).appName(suiteName).getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -70,12 +70,8 @@ object ChangeFeedCrashMain {
     val mode = args(0)
     val table = args(1)
     val feed = args(2)
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.GraftSession.builder("local[2]", 2)
       .appName(s"graft-changefeed-crash-$mode")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     mode match {

@@ -38,7 +38,8 @@ class ClusteringSpec extends AnyFunSuite with Matchers with SparkSpec {
     import spark.implicits._
     // 24 rounds = 3 trips through the every-8-rounds localCheckpoint;
     // before the truncation, a ~96-round chain crashed the driver on plan
-    // stringification (examples/CcProbe) — the lineage grew one
+    // stringification (examples/CcProbe, a dev main since removed, last in
+    // commit a49360d) — the lineage grew one
     // join+union+agg layer per round
     val pairs = (0L until 23L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val labels = NearDup.connectedComponentsLabelProp(pairs)

@@ -61,12 +61,8 @@ object CompactionCrashMain {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val dir = args(1)
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.GraftSession.builder("local[2]", 2)
       .appName(s"graft-compaction-crash-$mode")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     mode match {

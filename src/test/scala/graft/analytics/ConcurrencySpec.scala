@@ -30,14 +30,9 @@ class ConcurrencySpec extends AnyFunSuite with Matchers with graft.SparkSpec {
 
   // FAIR scheduling: each worker thread runs in its own pool, so no
   // query can starve the others — the production shared-session setup.
-  override lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
+  override lazy val spark: SparkSession = graft.GraftSession.builder("local[8]", 8)
     .appName(suiteName)
-    .config("spark.sql.shuffle.partitions", "8")
     .config("spark.scheduler.mode", "FAIR")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"

@@ -67,6 +67,18 @@ class GraphOpsSpec extends AnyFunSuite with Matchers with SparkSpec {
     got("A") should be > got("C")
   }
 
+  test("a malformed or non-positive spark.graft.pagerank.maxTypes fails naming the key") {
+    val ev = eventsOf(Seq((1L, Seq("A", "B", "A"))))
+    Seq("many", "0", "-3").foreach { bad =>
+      spark.conf.set("spark.graft.pagerank.maxTypes", bad)
+      try {
+        val e = intercept[IllegalArgumentException](GraphOps.eventPagerankDf(spark, ev))
+        e.getMessage should include("spark.graft.pagerank.maxTypes")
+        e.getMessage should include(s"'$bad'")
+      } finally spark.conf.unset("spark.graft.pagerank.maxTypes")
+    }
+  }
+
   test("g1 on testdata: 5 ranked types, descending, positive, conserved") {
     val out = GraphOps.eventPagerank(spark, "/root/testdata/sf0.001").collect()
     out.length shouldBe 5

@@ -60,13 +60,8 @@ class ChaosSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
       .foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
+    spark = graft.GraftSession.builder("local-cluster[2,2,1024]", 8)
       .appName("graft-chaos")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // spark.task.maxFailures stays at the cluster default (4): the whole
       // point is that ONE free retry absorbs each injected failure
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))

@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -69,12 +68,8 @@ object DriverCrashMain {
   def main(args: Array[String]): Unit = {
     val mode = args(0) // "crash" | "resume"
     val work = args(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = graft.GraftSession.builder("local[4]", 4)
       .appName(s"graft-driver-crash-$mode")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sess = spark

@@ -9,6 +9,9 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 import graft.core._
+import graft.monitoring.{EventSink, MetricsAggregator, ProcessingEvent, QueryListenerBridge,
+  ShardEventType, TestMonitoringHarness}
+import graft.monitoring.ProcessingEventType.ShardEvent
 import graft.processor.RecordProcessor
 import graft.sources.InMemorySourceClient
 
@@ -69,6 +72,33 @@ class GraftProcessorSpec extends AnyFunSuite with Matchers with SparkSpec {
     gp.run(spark, tmp()) shouldBe Right(())
     collected.size() shouldBe 99
     store.all("shard-0") shouldBe "0000000099" // past the failed 0000000050
+  }
+
+  test("engine and listener bridge on one aggregator: the '*' row holds the engine's own counts") {
+    val s = spark; import s.implicits._
+    val agg = new MetricsAggregator()
+    // the bridge feeds the aggregator too; `seen` tells when the bridge has
+    // had this query's termination, its last event
+    val seen = new TestMonitoringHarness
+    val bridge = new QueryListenerBridge(new EventSink {
+      override def emit(e: ProcessingEvent): Unit = { agg.emit(e); seen.emit(e) }
+    })
+    def terminated = seen.events.map(_.eventType).dropWhile {
+      case ShardEvent(ShardEventType.Started, Some(name)) => !name.startsWith("graft-bridged#")
+      case _ => true
+    }.contains(ShardEvent(ShardEventType.Completed, None))
+    spark.streams.addListener(bridge)
+    try {
+      new GraftProcessor[String](ProcessorConfig("bridged"), new HardOn50,
+        new InMemorySourceClient(mkShards(1, 100)), new InMemoryCheckpointStore, sink = agg)
+        .run(spark, tmp()) shouldBe Right(())
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!terminated && System.nanoTime() < deadline) Thread.sleep(10)
+      terminated shouldBe true
+    } finally spark.streams.removeListener(bridge)
+    val all = agg.snapshot("*")
+    all.recordsProcessed shouldBe 99
+    all.recordsFailed shouldBe 1
   }
 
   test("checkpoint recovery: restart with same app store resumes after stored sequence (test_suite2.rs:117-168)") {

@@ -69,13 +69,8 @@ class LocalClusterSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll 
       .foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
+    spark = graft.GraftSession.builder("local-cluster[2,2,1024]", 8)
       .appName("graft-local-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // executor JVMs must see the repo's classes + spark + scala jars;
       // the test JVM's own classpath is exactly that set
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))

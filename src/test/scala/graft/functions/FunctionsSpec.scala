@@ -17,6 +17,21 @@ class FunctionsSpec extends AnyFunSuite with Matchers with SparkSpec {
       .cache()
   }
 
+  /** `docs` plus one row whose words hold nulls, a run of eight among them:
+    * the interpreted chains skip a null word inside `concat_ws` (an
+    * all-null window joins to "") and hash a null token to null. */
+  private lazy val docsWithNulls = docs.unionByName(spark.sql(
+    """SELECT CAST(-1 AS BIGINT) AS doc_id, array('a', NULL, 'b', 'c', 'd', 'e', NULL,
+      |  'f', 'g', 'h', 'i', 'j', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, 'k') AS ws
+      |""".stripMargin))
+
+  /** The null-bearing row's native and composed arrays, which `!=` cannot
+    * compare once they hold nulls. */
+  private def nullRow(both: org.apache.spark.sql.DataFrame): (Seq[Any], Seq[Any]) = {
+    val r = both.filter("doc_id = -1").collect().head
+    (r.getSeq[Any](r.fieldIndex("native")), r.getSeq[Any](r.fieldIndex("composed")))
+  }
+
   test("graft_shingle_hashes == sorted distinct xxhash64 of concat_ws 3-grams") {
     val both = docs.selectExpr(
       "graft_shingle_hashes(ws) AS native",
@@ -96,15 +111,18 @@ class FunctionsSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   test("graft_md5_prefix_hashes == conv(substring(md5, 1, 15), 16, 10) per token") {
-    val both = docs.selectExpr(
+    val both = docsWithNulls.selectExpr("doc_id",
       "graft_md5_prefix_hashes(ws) AS native",
       "transform(ws, t -> CAST(conv(substring(md5(CAST(t AS BINARY)), 1, 15), 16, 10) AS BIGINT)) AS composed")
     both.filter("native != composed").count() shouldBe 0
     both.filter("size(native) > 0").count() should be > 400L
+    val (native, composed) = nullRow(both)
+    native shouldBe composed
+    native.count(_ == null) shouldBe 10
   }
 
   test("graft_shingle_md5_hashes == sorted distinct md5-prefix of concat_ws 5-grams") {
-    val both = docs.selectExpr(
+    val both = docsWithNulls.selectExpr("doc_id",
       "graft_shingle_md5_hashes(ws, 5) AS native",
       """CASE WHEN size(ws) >= 5 THEN array_sort(array_distinct(transform(
         |  transform(sequence(1, size(ws) - 4),
@@ -114,6 +132,11 @@ class FunctionsSpec extends AnyFunSuite with Matchers with SparkSpec {
         |ELSE array() END AS composed""".stripMargin)
     both.filter("native != composed").count() shouldBe 0
     both.filter("size(native) > 0").count() should be > 400L
+    val (native, composed) = nullRow(both)
+    native shouldBe composed
+    // 17 windows, 13 distinct strings: skipping nulls joins two windows to
+    // "b c d e", and four all-null windows to ""
+    native.length shouldBe 13
   }
 
   test("graft_shingle_md5_hashes matches a JVM reference on random corpora (edge sizes, unicode, empty words)") {
@@ -142,7 +165,7 @@ class FunctionsSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   test("graft_shingle_md5_sigs == per-instance signed-64 md5 prefix of concat_ws 8-grams (t26's interpreted chain)") {
-    val both = docs.selectExpr(
+    val both = docsWithNulls.selectExpr("doc_id",
       "graft_shingle_md5_sigs(ws, 8) AS native",
       """CASE WHEN size(ws) >= 8 THEN transform(sequence(1, size(ws) - 7),
         |  i -> CAST(conv(substring(md5(concat_ws(' ',
@@ -150,6 +173,9 @@ class FunctionsSpec extends AnyFunSuite with Matchers with SparkSpec {
         |ELSE array() END AS composed""".stripMargin)
     both.filter("native != composed").count() shouldBe 0
     both.filter("size(native) > 0").count() should be > 400L
+    val (native, composed) = nullRow(both)
+    native shouldBe composed
+    native.length shouldBe 14
     // per-INSTANCE means duplicates keep multiplicity: total sig count
     // equals total gram count, not the distinct count
     docs.selectExpr("size(graft_shingle_md5_sigs(ws, 8)) AS n",

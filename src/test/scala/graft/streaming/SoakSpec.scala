@@ -69,13 +69,8 @@ class SoakSpec extends AnyFunSuite with Matchers
   private val sfDir = "/root/testdata/sf0.001"
   private val nSlices = 200
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  private lazy val spark: SparkSession = graft.GraftSession.builder("local[4]", 4)
     .appName("SoakSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // keep the full 200+ entry progress history on the query handle
     .config("spark.sql.streaming.numRecentProgressUpdates", "400")
     // make checkpoint maintenance observable within the soak window:
