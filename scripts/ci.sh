@@ -6,11 +6,13 @@
 #   1. formatting gate (`scripts/fmtcheck.py` — the `cargo fmt --check`
 #      analog; sbt-scalafmt cannot resolve in the zero-egress sandbox, so
 #      the mechanical invariants are checked directly)
-#   2. compile warnings-clean (`sbt compile` — scalac lint flags in build.sbt
-#      are the clippy analog available offline; no new deps)
+#   2. compile (`sbt compile` — the scalac lint flags in build.sbt,
+#      `-Wunused:imports,privates,locals,patvars,params` and `-Wdead-code`,
+#      are the clippy analog available offline and report as warnings)
 #      + full ScalaTest suite (`sbt test`)
 #   3. benchmark harness compiles (`sbt compile` in perfbench/, which builds
-#      against src/main and pins engine signatures), with the offline flags
+#      against src/main and pins engine signatures), with the offline flags,
+#      then the benchmark's own Python tests (perfbench/tests)
 #   4. correctness gate: graft.Verify at sf0.001 + the DuckDB oracle compare
 #      (scripts/check_oracle.py — the driver-side replica of the round gate)
 #
@@ -30,6 +32,7 @@ echo "[ci] 3/5 benchmark harness compiles against src/main"
 (cd perfbench && COURSIER_MODE=offline SBT_OPTS="-Dsbt.override.build.repos=true \
   -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx3g" \
   sbt --batch compile)
+python3 -m unittest discover -s perfbench/tests
 
 echo "[ci] 4/5 verify dump at $SF"
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"

@@ -364,16 +364,21 @@ object Dedup {
       : (DataFrame, DataFrame) = {
     val e = containmentIncidences(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val st = e.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .agg(sum(col("df")).as("s1"), sum(col("df") * col("df")).as("s2"))
-      .head()
-    if (containmentDirectEligible(st.getLong(0), st.getLong(1)))
-      (containmentDedupDirectOn(e), e)
-    else {
-      // the incidence cache served only the profile aggregate here —
-      // release it before the prefix machinery builds its own tables
-      e.unpersist(false)
-      (containmentDedupPrefix(s, d), e)
+    try {
+      val st = e.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .agg(sum(col("df")).as("s1"), sum(col("df") * col("df")).as("s2"))
+        .head()
+      if (containmentDirectEligible(st.getLong(0), st.getLong(1)))
+        (containmentDedupDirectOn(e), e)
+      else {
+        // the incidence cache served only the profile aggregate here —
+        // release it before the prefix machinery builds its own tables
+        e.unpersist(false)
+        (containmentDedupPrefix(s, d), e)
+      }
+    } catch {
+      // a throw after persist leaves no caller holding `e` to release it
+      case t: Throwable => e.unpersist(false); throw t
     }
   }
 

@@ -242,7 +242,7 @@ object FormatQueries {
       // partition-pruned: exactly the staged delta=i files are opened
       val b = s.read.parquet(s"$log/log")
         .filter(col("delta") === i).drop("delta")
-      KeyedMerge.applyChanges(s, dir, b,
+      KeyedMerge.applyChanges(dir, b,
         keyCols = Seq("user_id"), seqCols = Seq("tsu", "event_id"), numBuckets)
     }
     KeyedMerge.read(s, dir)

@@ -77,10 +77,10 @@ object KeyedMerge {
     * @param seqCols  version columns, compared lexicographically; the
     *                 greatest wins (ties only on byte-identical replays).
     */
-  def applyChanges(outer: SparkSession, dir: String, changes: DataFrame,
+  def applyChanges(dir: String, changes: DataFrame,
       keyCols: Seq[String], seqCols: Seq[String], numBuckets: Int): Unit = {
-    // CRITICAL: operate on the session that OWNS the change frame, not the
-    // caller's handle. Inside foreachBatch the micro-batch Dataset belongs
+    // CRITICAL: operate on the session that OWNS the change frame (there is
+    // deliberately no session parameter). Inside foreachBatch the micro-batch Dataset belongs
     // to a CLONED session with an isolated SQLConf — setting
     // partitionOverwriteMode on the outer session would leave the clone's
     // write in STATIC mode, which deletes every untouched bucket of the

@@ -29,8 +29,6 @@ object Similarity {
 
   import Tables._
 
-  private val dim = 64
-
   /** Native one-pass cosine (graft_cosine, codegen'd) — the higher-order
     * zip_with/aggregate formulation is interpreted per element. */
   private def cosine(a: String, b: String): Column = expr(s"graft_cosine($a, $b)")
@@ -90,8 +88,8 @@ object Similarity {
     * item 1): explicit `bits0` (the e3 oracle pins 16 through the
     * registered query) → `spark.graft.ann.neardupBandBits` → SELF-SCALING
     * on corpus rows (≤10⁶ → 16, else 32). */
-  private def withBands(df: DataFrame, bits0: Int = 0,
-      selfScaleRows: => Long = 0L): DataFrame = {
+  private def withBands(df: DataFrame, bits0: Int,
+      selfScaleRows: => Long): DataFrame = {
     val bits =
       if (bits0 > 0) bits0
       else df.sparkSession.conf.getOption("spark.graft.ann.neardupBandBits") match {
@@ -246,12 +244,12 @@ object Similarity {
       nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val emb = withVec(embeddings(s, d), "embedding")
       .select(col("vec_id"), col("v"))
-    incrementalIvfTopKDf(s, emb, k, nCells, nProbe)
+    incrementalIvfTopKDf(emb, k, nCells, nProbe)
   }
 
   /** e20 on an explicit (vec_id, v) frame — spec seam for the
     * rebuild-equality replay. */
-  private[graft] def incrementalIvfTopKDf(s: SparkSession, emb: DataFrame,
+  private[graft] def incrementalIvfTopKDf(emb: DataFrame,
       k: Int = 5, nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val t = 4L * emb.count() / 5L // append cutoff: newest fifth is delta
     val centroids = emb

@@ -1,13 +1,11 @@
 package graft.analytics
 
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.engine.GraftProcessor
 import graft.processor.RecordProcessor
-import graft.sources.{EventStream, SourceClient}
 
 /** The minimum end-to-end slice as a registered, oracle-checked query
   * (SURVEY §7 step 4): events.parquet → 8-shard KRecord stream → custom
@@ -1319,7 +1317,7 @@ object StreamingQueries {
             when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
               .as(KeyedMerge.OpCol),
             col("event_type").as("last_type"), col("value").as("last_value"))
-          KeyedMerge.applyChanges(spark, dir, ch,
+          KeyedMerge.applyChanges(dir, ch,
             keyCols = Seq("user_id"), seqCols = Seq("tsu", "event_id"),
             numBuckets = numBuckets)
         }

@@ -2,7 +2,7 @@ package graft.engine
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core._
@@ -183,10 +183,15 @@ final class GraftProcessor[T](
       }
       val order = scala.collection.mutable.ArrayBuffer.empty[ShardAcc]
       val byShard = scala.collection.mutable.HashMap.empty[String, ShardAcc]
+      var cur: ShardAcc = null
       it.foreach { p =>
-        val acc = byShard.getOrElseUpdate(p.shardId, {
-          val a = new ShardAcc(p.shardId); order += a; a
-        })
+        // a shard's records are contiguous: the current accumulator almost
+        // always matches, and the row's shard id is usually the very instance
+        if (cur == null || !cur.shardId.equals(p.shardId))
+          cur = byShard.getOrElseUpdate(p.shardId, {
+            val a = new ShardAcc(p.shardId); order += a; a
+          })
+        val acc = cur
         if (p.failed) acc.failed += 1
         else {
           acc.success += 1
@@ -225,9 +230,11 @@ final class GraftProcessor[T](
 
     // Drive exactly one action over the pass (T2 side effects must run once):
     // the caller's consumer if provided, else a no-op job for the stats.
-    // Planned-partition count is known at planning time (no job) — the
-    // coverage floor for the commit pass.
-    val plannedPartitions = items.rdd.getNumPartitions.toLong
+    // The coverage floor for the commit pass is the batch's own partition
+    // count: both mapPartitions keep it, and the maxConcurrentShards coalesce
+    // is already inside the batch. The batch is planned already, so this
+    // reads a number instead of planning the item Dataset a second time.
+    val plannedPartitions = batch.queryExecution.toRdd.getNumPartitions.toLong
     if (onItems.asInstanceOf[AnyRef] eq GraftProcessor.NoopItems) items.foreach(_ => ())
     else {
       onItems(items, batchId)

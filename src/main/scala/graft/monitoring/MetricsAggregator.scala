@@ -1,6 +1,6 @@
 package graft.monitoring
 
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.ConcurrentHashMap
 
 /** M4 — windowed per-shard metrics, mirroring the reference's
   * `ShardMetrics` fields (`/root/reference/src/monitoring/metrics.rs:24-51`)
@@ -28,80 +28,68 @@ final case class ShardMetrics(
   * aggregator task, suitable for driver-side consumption of the engine's
   * event sinks; the cluster-scale path is [[MetricsAggregator.aggregate]],
   * the same fold as a Spark aggregation over an event Dataset.
+  *
+  * Locking: each shard has one mutable cell, and an event is folded into it
+  * under that cell's own lock, so emitters on different shards never touch
+  * shared state beyond one `ConcurrentHashMap` read. Each engine task owns
+  * its shard, so the lock is uncontended on the record path; two emitters
+  * on one shard (the listener bridge and the engine both write `*`) are
+  * serialized instead of overwriting each other. `snapshot` and
+  * `emitWindow` read each cell under its lock and build the immutable
+  * [[ShardMetrics]] only then. Eviction marks the cell removed under its
+  * lock before unmapping it, and an emitter that finds its cell removed
+  * retries on a fresh one, so no event is lost to a concurrent eviction.
   */
 final class MetricsAggregator(
     windowMs: Long = 60000L,
     onEmit: (String, ShardMetrics) => Unit = (_, _) => (),
     clock: () => Long = () => System.currentTimeMillis()
 ) extends EventSink {
+  import MetricsAggregator.Cell
 
-  private val metrics = TrieMap.empty[String, ShardMetrics]
+  private val cells = new ConcurrentHashMap[String, Cell]()
 
-  def snapshot: Map[String, ShardMetrics] = metrics.toMap
+  def snapshot: Map[String, ShardMetrics] = {
+    val b = Map.newBuilder[String, ShardMetrics]
+    cells.forEach { (shardId, c) =>
+      val m = c.synchronized(if (c.removed) null else c.metrics)
+      if (m != null) b += shardId -> m
+    }
+    b.result()
+  }
 
   override def emit(event: ProcessingEvent): Unit = processEvent(event)
 
   /** Event fold — one-to-one with `metrics.rs:114-302`. */
   def processEvent(event: ProcessingEvent): Unit = {
     val now = clock()
-    val m0 = metrics.getOrElseUpdate(event.shardId,
-      ShardMetrics(windowStartMs = now, lastUpdatedMs = now))
-    val m1 = event.eventType match {
-      case ProcessingEventType.RecordAttempt(_, success, attempt, durMs, error, isFinal) =>
-        var m = m0
-        if (success) m = m.copy(recordsProcessed = m.recordsProcessed + 1)
-        else if (isFinal) {
-          m = m.copy(recordsFailed = m.recordsFailed + 1)
-          if (error.isDefined) m = m.copy(hardErrors = m.hardErrors + 1)
-        } else m = m.copy(softErrors = m.softErrors + 1)
-        if (attempt > 1) m = m.copy(retryAttempts = m.retryAttempts + 1)
-        m = m.copy(processingTimeMs = m.processingTimeMs + durMs)
-        val n = m.recordsProcessed + m.recordsFailed
-        if (n > 0) m = m.copy(avgProcessingTimeMs = m.processingTimeMs.toDouble / n)
-        if (durMs > m.maxProcessingTimeMs) m = m.copy(maxProcessingTimeMs = durMs)
-        m
-      case ProcessingEventType.BatchComplete(ok, fail, durMs) =>
-        m0.copy(recordsProcessed = m0.recordsProcessed + ok,
-          recordsFailed = m0.recordsFailed + fail,
-          processingTimeMs = m0.processingTimeMs + durMs)
-      case ProcessingEventType.BatchStart(_) => m0
-      case ProcessingEventType.BatchMetrics(bm) =>
-        m0.copy(recordsProcessed = m0.recordsProcessed + bm.successfulCount,
-          recordsFailed = m0.recordsFailed + bm.failedCount,
-          processingTimeMs = m0.processingTimeMs + bm.durationMs)
-      case ProcessingEventType.BatchError(_, durMs) =>
-        m0.copy(hardErrors = m0.hardErrors + 1,
-          processingTimeMs = m0.processingTimeMs + durMs)
-      case ProcessingEventType.RecordSuccess(_, ckptOk) =>
-        val m = m0.copy(recordsProcessed = m0.recordsProcessed + 1)
-        if (ckptOk) m.copy(checkpointsSucceeded = m.checkpointsSucceeded + 1) else m
-      case ProcessingEventType.RecordFailure(_, _) =>
-        m0.copy(recordsFailed = m0.recordsFailed + 1, hardErrors = m0.hardErrors + 1)
-      case ProcessingEventType.CheckpointFailure(_, _) =>
-        m0.copy(checkpointsFailed = m0.checkpointsFailed + 1)
-      case ProcessingEventType.Iterator(t, _) => t match {
-        case IteratorEventType.Renewed => m0.copy(iteratorRenewals = m0.iteratorRenewals + 1)
-        case IteratorEventType.Failed => m0.copy(iteratorFailures = m0.iteratorFailures + 1)
-        case _ => m0
+    var done = false
+    while (!done) {
+      var c = cells.get(event.shardId)
+      if (c == null) {
+        val fresh = new Cell(now)
+        c = cells.putIfAbsent(event.shardId, fresh)
+        if (c == null) c = fresh
       }
-      case ProcessingEventType.ShardEvent(t, _) => t match {
-        case ShardEventType.Error => m0.copy(hardErrors = m0.hardErrors + 1)
-        case _ => m0
+      c.synchronized {
+        if (!c.removed) { c.fold(event.eventType, now); done = true }
       }
-      case ProcessingEventType.Checkpoint(_, success, _) =>
-        if (success) m0.copy(checkpointsSucceeded = m0.checkpointsSucceeded + 1)
-        else m0.copy(checkpointsFailed = m0.checkpointsFailed + 1)
     }
-    metrics.put(event.shardId, m1.copy(lastUpdatedMs = now))
-    ()
   }
 
   /** Window emission + idle eviction (> 2× window), `metrics.rs:304-361`. */
   def emitWindow(): Unit = {
     val now = clock()
-    metrics.foreach { case (shardId, m) =>
-      if (now - m.lastUpdatedMs > windowMs * 2) { metrics.remove(shardId); () }
-      else onEmit(shardId, m)
+    cells.forEach { (shardId, c) =>
+      val m = c.synchronized {
+        if (c.removed) null
+        else if (now - c.lastUpdatedMs > windowMs * 2) {
+          c.removed = true
+          cells.remove(shardId, c)
+          null
+        } else c.metrics
+      }
+      if (m != null) onEmit(shardId, m)
     }
   }
 }
@@ -109,6 +97,63 @@ final class MetricsAggregator(
 object MetricsAggregator {
   import org.apache.spark.sql.{DataFrame, Dataset}
   import org.apache.spark.sql.functions._
+
+  /** One shard's running fold. Guarded by its own monitor; `removed` marks
+    * a cell evicted by `emitWindow`, which emitters must not fold into. */
+  private final class Cell(windowStartMs: Long) {
+    var removed = false
+    private var recordsProcessed, recordsFailed, retryAttempts, processingTimeMs = 0L
+    private var checkpointsSucceeded, checkpointsFailed = 0L
+    private var iteratorRenewals, iteratorFailures, softErrors, hardErrors = 0L
+    private var avgProcessingTimeMs = 0.0
+    private var maxProcessingTimeMs = 0L
+    var lastUpdatedMs: Long = windowStartMs
+
+    def fold(et: ProcessingEventType, now: Long): Unit = {
+      et match {
+        case ProcessingEventType.RecordAttempt(_, success, attempt, durMs, error, isFinal) =>
+          if (success) recordsProcessed += 1
+          else if (isFinal) {
+            recordsFailed += 1
+            if (error.isDefined) hardErrors += 1
+          } else softErrors += 1
+          if (attempt > 1) retryAttempts += 1
+          processingTimeMs += durMs
+          val n = recordsProcessed + recordsFailed
+          if (n > 0) avgProcessingTimeMs = processingTimeMs.toDouble / n
+          if (durMs > maxProcessingTimeMs) maxProcessingTimeMs = durMs
+        case ProcessingEventType.BatchComplete(ok, fail, durMs) =>
+          recordsProcessed += ok; recordsFailed += fail; processingTimeMs += durMs
+        case ProcessingEventType.BatchStart(_) => ()
+        case ProcessingEventType.BatchMetrics(bm) =>
+          recordsProcessed += bm.successfulCount; recordsFailed += bm.failedCount
+          processingTimeMs += bm.durationMs
+        case ProcessingEventType.BatchError(_, durMs) =>
+          hardErrors += 1; processingTimeMs += durMs
+        case ProcessingEventType.RecordSuccess(_, ckptOk) =>
+          recordsProcessed += 1
+          if (ckptOk) checkpointsSucceeded += 1
+        case ProcessingEventType.RecordFailure(_, _) =>
+          recordsFailed += 1; hardErrors += 1
+        case ProcessingEventType.CheckpointFailure(_, _) => checkpointsFailed += 1
+        case ProcessingEventType.Iterator(t, _) => t match {
+          case IteratorEventType.Renewed => iteratorRenewals += 1
+          case IteratorEventType.Failed => iteratorFailures += 1
+          case _ => ()
+        }
+        case ProcessingEventType.ShardEvent(t, _) =>
+          if (t == ShardEventType.Error) hardErrors += 1
+        case ProcessingEventType.Checkpoint(_, success, _) =>
+          if (success) checkpointsSucceeded += 1 else checkpointsFailed += 1
+      }
+      lastUpdatedMs = now
+    }
+
+    def metrics: ShardMetrics = ShardMetrics(recordsProcessed, recordsFailed, retryAttempts,
+      processingTimeMs, checkpointsSucceeded, checkpointsFailed, iteratorRenewals,
+      iteratorFailures, softErrors, hardErrors, avgProcessingTimeMs, maxProcessingTimeMs,
+      windowStartMs, lastUpdatedMs)
+  }
 
   /** Flat event row for the Dataset path (sealed-trait payloads flattened —
     * streaming-friendly schema). */
@@ -126,7 +171,7 @@ object MetricsAggregator {
   def toRow(e: ProcessingEvent): EventRow = e.eventType match {
     case ProcessingEventType.RecordAttempt(_, ok, at, dur, err, fin) =>
       EventRow(e.timestampMs, e.shardId, "record_attempt", ok, fin, at, dur, err.isDefined)
-    case ProcessingEventType.RecordSuccess(_, ck) =>
+    case ProcessingEventType.RecordSuccess(_, _) =>
       EventRow(e.timestampMs, e.shardId, "record_success", true, true, 0, 0, false)
     case ProcessingEventType.RecordFailure(_, _) =>
       EventRow(e.timestampMs, e.shardId, "record_failure", false, true, 0, 0, true)

@@ -106,10 +106,24 @@ object EventSink {
     * this is the standard local-mode collection pattern (same trick as
     * Spark's own in-memory sinks). On a real cluster the events stay
     * executor-local — the cluster path for metrics is the Dataset-based
-    * aggregation in [[MetricsAggregator]]. */
+    * aggregation in [[MetricsAggregator]].
+    *
+    * `emit` looks the id up in the registry on every call. Hot paths resolve
+    * the handle once instead, with [[EventSink.resolve]]: the engine does so
+    * once per partition in `RecordProcessing.process` and once per source
+    * reader, so a sink registered or unregistered while a partition runs
+    * takes effect from the next partition on. */
   final case class Registered(id: String) extends EventSink {
     override def emit(event: ProcessingEvent): Unit =
       Option(EventSink.registry.get(id)).foreach(_.emit(event))
+  }
+
+  /** The sink `sink` stands for in this JVM, looked up now: a [[Registered]]
+    * handle becomes its registered target, or [[Noop]] when nothing is
+    * registered under its id; any other sink is returned as it is. */
+  def resolve(sink: EventSink): EventSink = sink match {
+    case Registered(id) => Option(registry.get(id)).getOrElse(Noop)
+    case other => other
   }
 
   private val registry = new java.util.concurrent.ConcurrentHashMap[String, EventSink]()

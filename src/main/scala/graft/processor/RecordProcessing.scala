@@ -56,7 +56,15 @@ object RecordProcessing {
       val watchdog = new PartitionWatchdog(timeoutMs)
       Option(TaskContext.get()).foreach(
         _.addTaskCompletionListener[Unit](_ => watchdog.close()))
-      iter.map(rec => processSingle(rec, processor, timeoutMs, watchdog, sink, shutdown))
+      val target = EventSink.resolve(sink) // once per partition, not per event
+      // The deserializer builds a fresh shard-id String per record; events
+      // and rows carry one instance per run of a shard instead, so the
+      // sink's per-shard lookup hashes it once and matches it by reference.
+      var shardId: String = null
+      iter.map { rec =>
+        if (!rec.shardId.equals(shardId)) shardId = rec.shardId
+        retryLoop(rec, shardId, processor, timeoutMs, watchdog, target, shutdown)
+      }
     }
   }
 
@@ -69,6 +77,17 @@ object RecordProcessing {
       timeoutMs: Long,
       watchdog: PartitionWatchdog,
       sink: EventSink,
+      shutdown: ShutdownSignal): Processed[T] =
+    retryLoop(record, record.shardId, processor, timeoutMs, watchdog, sink, shutdown)
+
+  /** [[processSingle]] with the shard id the events and the row carry. */
+  private def retryLoop[T](
+      record: KRecord,
+      shardId: String,
+      processor: RecordProcessor[T],
+      timeoutMs: Long,
+      watchdog: PartitionWatchdog,
+      sink: EventSink,
       shutdown: ShutdownSignal): Processed[T] = {
     val seq = record.sequenceNumber
     var attempt = 0
@@ -76,26 +95,26 @@ object RecordProcessing {
       if (shutdown.isShutdown || Thread.currentThread().isInterrupted)
         throw ProcessorError.Shutdown
       val t0 = System.nanoTime()
-      val meta = RecordMetadata(record.shardId, seq, attempt)
-      val outcome = attemptWithDeadline(record, meta, processor, timeoutMs, watchdog)
-      val durMs = (System.nanoTime() - t0) / 1000000L
-      outcome match {
+      val meta = RecordMetadata(shardId, seq, attempt)
+      attemptWithDeadline(record, meta, processor, timeoutMs, watchdog) match {
         case Right(itemOpt) =>
           // success emits ONLY RecordSuccess (reference `processor.rs:1499-1503`;
           // successful attempts are not RecordAttempt events — emitting both
           // would double-count records_processed in the M4 fold)
-          sink.emit(event(record.shardId,
+          sink.emit(event(shardId,
             ProcessingEventType.RecordSuccess(seq, checkpointSuccess = false)))
-          return Processed(record.shardId, seq, itemOpt, failed = false, attempt, None)
+          return Processed(shardId, seq, itemOpt, failed = false, attempt, None)
         case Left(e: ProcessingError.SoftFailure) =>
-          sink.emit(event(record.shardId,
+          // the only event that reports the attempt's duration
+          val durMs = (System.nanoTime() - t0) / 1000000L
+          sink.emit(event(shardId,
             ProcessingEventType.RecordAttempt(seq, success = false, attempt, durMs,
               Some(e.getMessage), isFinalAttempt = false)))
           attempt += 1 // retry forever — reference `processor.rs:1506-1510`
         case Left(e: ProcessingError.HardFailure) =>
-          sink.emit(event(record.shardId,
+          sink.emit(event(shardId,
             ProcessingEventType.RecordFailure(seq, e.getMessage)))
-          return Processed(record.shardId, seq, None, failed = true, attempt, Some(e.getMessage))
+          return Processed(shardId, seq, None, failed = true, attempt, Some(e.getMessage))
       }
     }
     sys.error("unreachable")
@@ -116,7 +135,7 @@ object RecordProcessing {
       watchdog.disarm() // a fire that raced completion is cleared, result stands
       result
     } catch {
-      case e: InterruptedException =>
+      case _: InterruptedException =>
         if (watchdog.disarm())
           throw ShardError(record.shardId,
             s"processing timeout after ${timeoutMs}ms on sequence ${record.sequenceNumber}")

@@ -1,5 +1,7 @@
 package graft.processor
 
+import scala.annotation.unused
+
 import graft.core._
 
 /** T1 — the engine's single user extension point, mirroring the reference
@@ -32,6 +34,6 @@ trait RecordProcessor[T] extends Serializable {
     * NOT saved and the micro-batch fails, so its records are re-delivered
     * (`processor.rs:1561-1606`; see [[graft.engine.GraftProcessor]]). */
   def beforeCheckpoint(
-      items: Seq[T],
-      metadata: CheckpointMetadata): Either[BeforeCheckpointError, Unit] = Right(())
+      @unused items: Seq[T],
+      @unused metadata: CheckpointMetadata): Either[BeforeCheckpointError, Unit] = Right(())
 }

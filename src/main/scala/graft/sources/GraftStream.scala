@@ -3,7 +3,6 @@ package graft.sources
 import java.util.{Map => JMap}
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -316,7 +315,12 @@ final class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader
             "embeddable in-memory one")
       }
     }
-  private val sink: EventSink = p.eventSinkId.map(EventSink.Registered).getOrElse(EventSink.Noop)
+  // resolved once per reader: events skip the registry lookup
+  private val sink: EventSink =
+    EventSink.resolve(p.eventSinkId.map(EventSink.Registered).getOrElse(EventSink.Noop))
+  // every record of the range normally carries the partition's shard id:
+  // encode it once, and fall back to a per-record encode for any that differs
+  private val shardIdUtf8 = UTF8String.fromString(p.shardId)
 
   /** Absolute index of the next record to fetch; fallback renewal may move
     * it backward (replay), never past `endIdx`. */
@@ -404,7 +408,7 @@ final class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader
       UTF8String.fromString(r.partitionKey),
       r.data,
       r.approximateArrivalTimestamp.fold(null: Any)(t => t.getTime * 1000L),
-      UTF8String.fromString(r.shardId),
+      if (r.shardId == p.shardId) shardIdUtf8 else UTF8String.fromString(r.shardId),
       r.explicitHashKey.fold(null: Any)(UTF8String.fromString)))
   }
 

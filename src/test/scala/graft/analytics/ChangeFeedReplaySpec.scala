@@ -85,7 +85,7 @@ class ChangeFeedReplaySpec extends AnyFunSuite with Matchers with SparkSpec {
     val viaDiff = freshDir(); val viaPlain = freshDir(); val feed = freshDir()
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
       applyWithFeed(viaDiff, feed, changes(b: _*), i.toLong)
-      KeyedMerge.applyChanges(spark, viaPlain, changes(b: _*),
+      KeyedMerge.applyChanges(viaPlain, changes(b: _*),
         Seq("k"), Seq("seq"), 4)
     }
     state(viaDiff) shouldBe state(viaPlain)

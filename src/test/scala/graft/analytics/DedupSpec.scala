@@ -158,6 +158,22 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkSpec {
     direct.size shouldBe 100 * 99 // every ordered pair, containment 1.0
   }
 
+  test("d7 dispatch releases its incidence cache when a job after persist throws") {
+    val s = spark; import s.implicits._
+    val docs = (0L until 200L).map(i => (i, s"doc $i " + ("alpha beta gamma delta " * 20)))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-d7c").toString
+    docs.toDF("doc_id", "text").coalesce(1).write.parquet(s"$tmp/documents.parquet")
+    // the footer stays intact, so the schema reads at plan time; the first
+    // page header is garbage, so the profile job fails after the persist
+    val part = new java.io.File(s"$tmp/documents.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val raf = new java.io.RandomAccessFile(part, "rw")
+    try { raf.seek(4); raf.write(Array.fill[Byte](64)(-1)) } finally raf.close()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    an[Exception] should be thrownBy Dedup.containmentDedupDispatch(spark, tmp)
+    spark.sparkContext.getPersistentRDDs.keySet shouldBe before
+  }
+
   test("d11 planted-run recall: a 35-char shared run is found at ANY alignment; sub-threshold runs are not") {
     val s = spark; import s.implicits._
     val rng = new scala.util.Random(23)

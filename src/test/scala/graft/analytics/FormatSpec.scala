@@ -59,7 +59,6 @@ class FormatSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   test("f9 as-of read prunes later deltas at planning time (PartitionFilters) and replays LWW") {
-    import org.apache.spark.sql.functions.col
     val s = spark
     import s.implicits._
     val dir = Files.createTempDirectory("graft-vt-spec").toString + "/t"

@@ -2,7 +2,6 @@ package graft.analytics
 
 import java.io.File
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -37,7 +36,7 @@ class KeyedMergeSpec extends AnyFunSuite with Matchers with SparkSpec {
       .toSet
 
   private def apply1(dir: String, df: org.apache.spark.sql.DataFrame, nb: Int = 4): Unit =
-    KeyedMerge.applyChanges(spark, dir, df, Seq("k"), Seq("seq"), nb)
+    KeyedMerge.applyChanges(dir, df, Seq("k"), Seq("seq"), nb)
 
   test("upsert + delete + last-writer-wins") {
     val dir = freshDir()

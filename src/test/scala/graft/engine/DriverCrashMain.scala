@@ -93,7 +93,7 @@ object DriverCrashMain {
       onItems = (ds, bid) => {
         val df = ds.toDF("shard", "seq", "etype")
         df.write.mode("append").parquet(rawDir)
-        graft.analytics.KeyedMerge.applyChanges(spark, tableDir,
+        graft.analytics.KeyedMerge.applyChanges(tableDir,
           df.withColumn(graft.analytics.KeyedMerge.OpCol, lit("u")),
           keyCols = Seq("shard", "seq"), seqCols = Seq("seq"), numBuckets = 8)
         System.err.println(s"[crashmain] run$runId batch $bid in=${df.count()} " +

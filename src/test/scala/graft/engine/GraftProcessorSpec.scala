@@ -152,6 +152,27 @@ class GraftProcessorSpec extends AnyFunSuite with Matchers with SparkSpec {
     store.all.get("shard-3") shouldBe None
   }
 
+  test("commit coverage under maxConcurrentShards: a partial action (take) still commits every shard") {
+    val s = spark; import s.implicits._
+    val store = new InMemoryCheckpointStore
+    // six shards coalesced into two partitions; take(1) reads only the first
+    val gp = new GraftProcessor[String](ProcessorConfig("t", maxConcurrentShards = Some(2)),
+      new Echo, new InMemorySourceClient(mkShards(6, 50)), store,
+      onItems = (ds, _) => { ds.take(1); () })
+    gp.run(spark, tmp()) shouldBe Right(())
+    store.all shouldBe (0 until 6).map(i => s"shard-$i" -> "0000000049").toMap
+  }
+
+  test("commit coverage under maxConcurrentShards: a partial action cannot mask a hard validation error") {
+    val s = spark; import s.implicits._
+    val store = new InMemoryCheckpointStore
+    val gp = new GraftProcessor[String](ProcessorConfig("t", maxConcurrentShards = Some(2)),
+      new HardOnShard3, new InMemorySourceClient(mkShards(6, 50)), store,
+      onItems = (ds, _) => { ds.take(1); () })
+    gp.run(spark, tmp()) should matchPattern { case Left(_) => }
+    store.all.get("shard-3") shouldBe None
+  }
+
   test("checkpoint save is retried until success, never skipped (test_suite3.rs:429, ADVICE r1)") {
     flakySaves.set(0)
     val store = new FlakySaveStore(failures = 3)

@@ -60,6 +60,99 @@ class MonitoringSpec extends AnyFunSuite with Matchers with SparkSpec {
     agg.snapshot.keySet shouldBe Set("fresh")
   }
 
+  /** Runs `body(k)` on `threads` threads released together; rethrows the
+    * first failure. */
+  private def together(threads: Int)(body: Int => Unit): Unit = {
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val ts = (0 until threads).map { k =>
+      val t = new Thread(() =>
+        try { start.await(); body(k) } catch { case e: Throwable => errors.add(e); () })
+      t.start(); t
+    }
+    start.countDown()
+    ts.foreach(_.join(60000))
+    Option(errors.peek()).foreach(e => throw e)
+  }
+
+  /** Thread `k`'s share of a mix touching every counter of the fold. */
+  private def mix(k: Int, n: Int, shards: IndexedSeq[String]): IndexedSeq[ProcessingEvent] =
+    (0 until n).map { i =>
+      val shard = shards((i + k) % shards.size)
+      val seq = s"$k-$i"
+      ev(shard, (i % 9) match {
+        case 0 => RecordSuccess(seq, checkpointSuccess = i % 2 == 0)
+        case 1 => RecordAttempt(seq, success = false, i % 4, (i % 13).toLong, Some("soft"),
+          isFinalAttempt = false)
+        case 2 => RecordAttempt(seq, success = i % 2 == 0, i % 3, (i % 7).toLong, None,
+          isFinalAttempt = true)
+        case 3 => RecordFailure(seq, "hard")
+        case 4 => BatchComplete(3, 1, (i % 11).toLong)
+        case 5 => Checkpoint(seq, success = i % 3 != 0, None)
+        case 6 => Iterator(if (i % 2 == 0) IteratorEventType.Renewed else IteratorEventType.Failed, None)
+        case 7 => ShardEvent(ShardEventType.Error, None)
+        case _ => CheckpointFailure(seq, "boom")
+      })
+    }
+
+  test("concurrent emitters fold exactly like the sequential fold, on one shard and on a few") {
+    Seq(IndexedSeq("*"), IndexedSeq("a", "b", "c")).foreach { shards =>
+      val threads = 8
+      val perThread = 20000
+      val events = (0 until threads).map(k => mix(k, perThread, shards))
+      // avgProcessingTimeMs is set by the last RecordAttempt, so one final
+      // attempt per shard, folded after the threads, makes it order-free
+      val last = shards.map(sh => ev(sh, RecordAttempt("last", success = true, 1, 5, None,
+        isFinalAttempt = true)))
+      val sequential = new MetricsAggregator(clock = () => 1000L)
+      (events.flatten ++ last).foreach(sequential.processEvent)
+
+      val concurrent = new MetricsAggregator(clock = () => 1000L)
+      together(threads)(k => events(k).foreach(concurrent.emit))
+      last.foreach(concurrent.processEvent)
+      withClue(s"shards ${shards.mkString(",")}: ") {
+        concurrent.snapshot shouldBe sequential.snapshot
+      }
+    }
+  }
+
+  test("window eviction running beside emitters loses no event a live shard received") {
+    val shards = (0 until 64).map(i => s"s$i")
+    val live = shards.filter(_.drop(1).toInt % 2 == 0) // the odd ones go idle
+    val emitters = 4
+    val reps = 200
+    (1 to 10).foreach { round =>
+      val now = new java.util.concurrent.atomic.AtomicLong(0L)
+      val agg = new MetricsAggregator(windowMs = 100, clock = () => now.get())
+      // at t=0 every shard gets 5 checkpoints; then t jumps past 2x the
+      // window, so each shard is due for eviction until it hears again
+      shards.foreach(sh => (1 to 5).foreach(_ =>
+        agg.processEvent(ev(sh, Checkpoint("0", success = true, None)))))
+      now.set(1000L)
+      val running = new java.util.concurrent.atomic.AtomicInteger(emitters)
+      together(emitters + 1) { k =>
+        if (k == emitters) while (running.get() > 0) agg.emitWindow()
+        else {
+          // one emitter per live shard, so only eviction can lose an event
+          val mine = live.zipWithIndex.collect { case (sh, i) if i % emitters == k => sh }
+          try (1 to reps).foreach(r => mine.foreach(sh =>
+            agg.emit(ev(sh, RecordSuccess(r.toString, checkpointSuccess = false)))))
+          finally { running.decrementAndGet(); () }
+        }
+      }
+      agg.emitWindow()
+      val snap = agg.snapshot
+      withClue(s"round $round: ") {
+        snap.keySet shouldBe live.toSet // every idle shard was evicted
+        live.foreach { sh =>
+          snap(sh).recordsProcessed shouldBe reps
+          // the t=0 cell was either evicted whole or kept whole
+          Set(0L, 5L) should contain(snap(sh).checkpointsSucceeded)
+        }
+      }
+    }
+  }
+
   test("harness waits for event patterns with timeout (types.rs:294-324)") {
     val h = new TestMonitoringHarness
     new Thread(() => {

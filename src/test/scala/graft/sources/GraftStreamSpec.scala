@@ -24,7 +24,7 @@ class GraftStreamSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private def tmpDir(): String = Files.createTempDirectory("graft-spec").toString
 
-  private def readAll(clientKey: String, extraOptions: Map[String, String] = Map.empty,
+  private def readAll(clientKey: String, extraOptions: Map[String, String],
       checkpointDir: String = tmpDir()): Long = {
     val reader = spark.readStream.format("graft-stream").option("client", clientKey)
     extraOptions.foreach { case (k, v) => reader.option(k, v) }
@@ -81,6 +81,33 @@ class GraftStreamSpec extends AnyFunSuite with Matchers with SparkSpec {
       }
       spark.sql("DROP TABLE ehk")
     } finally SourceClientRegistry.unregister("cehk")
+  }
+
+  test("every envelope field reaches the row: partition keys, hash keys and arrival times, null and set") {
+    val shards = (0 until 3).map { sh =>
+      val id = s"shard-$sh"
+      id -> (0 until 40).map { i =>
+        KRecord(f"$i%010d", s"user-${(i * 7 + sh) % 5}", s"v-$sh-$i".getBytes("UTF-8"),
+          if (i % 2 == 0) Some(new java.sql.Timestamp(1700000000000L + i * 1001L)) else None,
+          id, if (i % 3 == 0) Some(s"ehk-$sh-$i") else None)
+      }
+    }.toMap
+    SourceClientRegistry.register("cfields", new InMemorySourceClient(shards))
+    try {
+      val q = spark.readStream.format("graft-stream")
+        .option("client", "cfields").option("batchsize", "7").load()
+        .writeStream.format("memory").queryName("fields")
+        .option("checkpointLocation", tmpDir())
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(60000)
+      def key(r: KRecord) = (r.shardId, r.sequenceNumber, r.partitionKey, r.data.toSeq,
+        r.approximateArrivalTimestamp.map(_.getTime), r.explicitHashKey)
+      val s = spark; import s.implicits._
+      val got = spark.table("fields").as[KRecord].collect().map(key)
+      got.length shouldBe 120
+      got.toSet shouldBe shards.values.flatten.map(key).toSet
+      spark.sql("DROP TABLE fields")
+    } finally SourceClientRegistry.unregister("cfields")
   }
 
   test("admission cap: at most batchSize*maxLoops records per shard per micro-batch (S4)") {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -48,10 +48,6 @@ class SinkSoakSpec extends AnyFunSuite with Matchers with SparkSpec {
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(countFiles(_, p)).sum
     else if (p(f.getName)) 1 else 0
 
-  private def dirSize(f: File): Long =
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(dirSize).sum
-    else f.length()
-
   /** 200 mtime-ordered slices of the normalized events CDC columns. */
   private def sliceEvents(base: String): String = {
     val sliceDir = s"$base/slices"
@@ -86,7 +82,7 @@ class SinkSoakSpec extends AnyFunSuite with Matchers with SparkSpec {
       .writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
         val ch = b.cache()
-        KeyedMerge.applyChanges(spark, mergeDir, ch,
+        KeyedMerge.applyChanges(mergeDir, ch,
           keyCols = Seq("user_id"), seqCols = Seq("tsu", "event_id"),
           numBuckets = numBuckets)
         VersionedTable.commitDelta(logDir, ch, batchId)
