@@ -12,7 +12,9 @@
 #      + full ScalaTest suite (`sbt test`)
 #   3. benchmark harness compiles (`sbt compile` in perfbench/, which builds
 #      against src/main and pins engine signatures), with the offline flags,
-#      then the benchmark's own Python tests (perfbench/tests)
+#      then the benchmark's own Python tests (perfbench/tests), then one
+#      short engine-drain run whose independent checks (exactly-once sums,
+#      dead letters, final checkpoints, monitoring counts) must all pass
 #   4. correctness gate: graft.Verify at sf0.001 + the DuckDB oracle compare
 #      (scripts/check_oracle.py — the driver-side replica of the round gate)
 #
@@ -28,11 +30,17 @@ python3 scripts/fmtcheck.py
 echo "[ci] 2/5 compile + test"
 sbt -batch compile test
 
-echo "[ci] 3/5 benchmark harness compiles against src/main"
+echo "[ci] 3/5 benchmark harness compiles against src/main; one engine-drain run passes its checks"
 (cd perfbench && COURSIER_MODE=offline SBT_OPTS="-Dsbt.override.build.repos=true \
   -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx3g" \
   sbt --batch compile)
 python3 -m unittest discover -s perfbench/tests
+LAST="$(python3 perfbench/run.py --workload engine-drain --seed 1 --seconds 3 --trace 0 | tail -n 1)"
+echo "$LAST"
+case "$LAST" in
+  *'"correct": true'*) ;;
+  *) echo "[ci] engine-drain run failed its checks"; exit 1 ;;
+esac
 
 echo "[ci] 4/5 verify dump at $SF"
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"

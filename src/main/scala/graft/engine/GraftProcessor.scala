@@ -2,13 +2,22 @@ package graft.engine
 
 import java.util.UUID
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core._
 import graft.monitoring.{EventSink, ProcessingEvent, ProcessingEventType, ShardEventType}
-import graft.processor.{Processed, RecordProcessing, RecordProcessor}
-import graft.sources.{FactoryConstructible, IndexedSourceClient, IndexedThrottleRetryingClient, SourceClientRegistry}
+import graft.processor.{RecordProcessing, RecordProcessor}
+import graft.sources.{FactoryConstructible, GraftInputPartition, GraftMicroBatchStream, IndexedSourceClient,
+  IndexedThrottleRetryingClient, ShardRangeRDD, SourceClientRegistry}
 
 /** Per-shard commit work computed executor-side per micro-batch.
   * `validated=false` means the T2 loop did not complete (interrupted
@@ -33,8 +42,9 @@ final case class CommitTask(
   *   - O2 `run`: blocking loop with optional `total_timeout` →
   *     `TotalProcessingTimeout` (`processor.rs:624-670`)
   *   - O3: task-per-shard parallelism is the source's partition planning;
-  *     `maxConcurrentShards` caps it by coalescing partitions (the
-  *     semaphore analog — fewer concurrent workers, per-shard order kept)
+  *     `maxConcurrentShards` caps it by coalescing the batch's record RDD
+  *     (the semaphore analog — fewer concurrent workers, per-shard order
+  *     kept)
   *   - O8: cooperative shutdown → `query.stop()`; the in-flight epoch is
   *     abandoned, matching the reference abandoning the in-flight batch
   *   - T2/K4 commit path (`processor.rs:1561-1629`): per shard, after each
@@ -50,6 +60,18 @@ final case class CommitTask(
   *     them. A validation loop interrupted by shutdown also does not save
   *     (reference returns `ProcessorError::Shutdown`,
   *     `processor.rs:1577,1599-1601`).
+  *
+  * How a micro-batch's records are read: Spark plans the batch as usual
+  * (the `graft-stream` source's offsets, admission and one
+  * `planInputPartitions` call), and `runBatch` takes the planned shard
+  * ranges from the batch's `MicroBatchScanExec`. A [[ShardRangeRDD]] reads
+  * them as the client's own [[KRecord]]s, and the commit fold maps over
+  * that RDD. No record becomes a Spark row on the way to the record
+  * function; only items are encoded, for `onItems`. The `foreachBatch`
+  * rows themselves are never evaluated (an action on them would read the
+  * ranges a second time). Every record read is added to the scan's
+  * `numOutputRows` metric, so `StreamingQueryProgress.numInputRows` is
+  * still Spark's own count of what the batch read.
   *
   * Two checkpoint layers by design (SURVEY §1.1): Spark's offset/commit log
   * is the engine checkpoint (exactly-once restart of stream positions); the
@@ -85,7 +107,7 @@ final class GraftProcessor[T](
     sink: EventSink = EventSink.Noop,
     onItems: (Dataset[T], Long) => Unit =
       GraftProcessor.NoopItems.asInstanceOf[(Dataset[T], Long) => Unit]
-)(implicit itemEnc: Encoder[T], processedEnc: Encoder[Processed[T]]) {
+)(implicit itemEnc: Encoder[T]) {
 
   config.validated() // O1
 
@@ -140,40 +162,47 @@ final class GraftProcessor[T](
       case _ => ()
     }
 
-    val raw = reader.load().as[KRecord](org.apache.spark.sql.Encoders.product[KRecord])
-    // O3 concurrency cap: coalesce merges shard partitions (order within
-    // each shard preserved), bounding concurrent shard workers like the
-    // reference's Semaphore (`processor.rs:679-683`).
-    val capped = config.maxConcurrentShards.fold(raw)(raw.coalesce)
-
-    capped.writeStream
-      .queryName(s"graft-$instanceId") // unique: processors may share a stream name
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch((batch: Dataset[KRecord], batchId: Long) => runBatch(batch, batchId))
-      .trigger(trigger)
-      .start()
+    // The first batch may start before `start` returns: it waits for the
+    // query handle, through which it finds the batch's planned ranges.
+    val handle = Promise[StreamingQuery]()
+    try {
+      val query = reader.load().writeStream
+        .queryName(s"graft-$instanceId") // unique: processors may share a stream name
+        .option("checkpointLocation", checkpointLocation)
+        .foreachBatch((batch: DataFrame, batchId: Long) => runBatch(handle.future, batch, batchId))
+        .trigger(trigger)
+        .start()
+      handle.success(query)
+      query
+    } catch {
+      case e: Throwable => handle.tryFailure(e); throw e
+    }
   }
 
   /** One micro-batch: T3 processing → T2 validation → K4 commit → items out —
-    * as ONE Spark job. The source plans one partition per shard and
-    * `coalesce` concatenates whole parent partitions, so each shard's
-    * records are contiguous within a single partition: the per-shard fold +
-    * T2 validation run in the same `mapPartitions` pass that feeds `onItems`
-    * (no cache, no shuffle, no second scan). Commit stats travel back on a
-    * collection accumulator — one tiny row per shard. */
-  private def runBatch(batch: Dataset[KRecord], batchId: Long): Unit = {
+    * as ONE Spark job. The batch's records come from [[plannedRecords]], one
+    * partition per shard range; `coalesce` (the `maxConcurrentShards` cap)
+    * concatenates whole ranges, so each shard's records are contiguous
+    * within a single partition: the per-shard fold + T2 validation run in
+    * the same `mapPartitions` pass that feeds `onItems` (no cache, no
+    * shuffle, no second scan). Commit stats travel back on a collection
+    * accumulator — one tiny row per shard. `batch` (the micro-batch's rows)
+    * only lends its session: evaluating it would read the ranges again. */
+  private def runBatch(query: Future[StreamingQuery], batch: DataFrame, batchId: Long): Unit = {
     val t0 = System.nanoTime()
     emitAll(ProcessingEventType.BatchStart(System.currentTimeMillis()))
-    val processed = RecordProcessing.process(batch, processor, config, sinkHandle)
-    val session = processed.sparkSession
+    val session = batch.sparkSession
+    val records = plannedRecords(Await.result(query, Duration.Inf), session.sparkContext)
     val commitsAcc =
       session.sparkContext.collectionAccumulator[CommitTask](s"graft-commits-$batchId")
 
     val partsAcc = session.sparkContext.longAccumulator(s"graft-parts-$batchId")
 
     val proc = processor
+    val cfg = config
     val sinkH = sinkHandle
-    val items: Dataset[T] = processed.mapPartitions { it =>
+    implicit val itemTag: ClassTag[T] = itemEnc.clsTag
+    val items: RDD[T] = records.mapPartitions { it =>
       partsAcc.add(1L) // commit-pass coverage marker (see below)
       // Contiguous per-shard accumulation (one shard never spans partitions)
       final class ShardAcc(val shardId: String) {
@@ -184,9 +213,9 @@ final class GraftProcessor[T](
       val order = scala.collection.mutable.ArrayBuffer.empty[ShardAcc]
       val byShard = scala.collection.mutable.HashMap.empty[String, ShardAcc]
       var cur: ShardAcc = null
-      it.foreach { p =>
+      RecordProcessing.processPartition(it, proc, cfg, sinkH).foreach { p =>
         // a shard's records are contiguous: the current accumulator almost
-        // always matches, and the row's shard id is usually the very instance
+        // always matches, and its shard id is usually the very instance
         if (cur == null || !cur.shardId.equals(p.shardId))
           cur = byShard.getOrElseUpdate(p.shardId, {
             val a = new ShardAcc(p.shardId); order += a; a
@@ -226,18 +255,13 @@ final class GraftProcessor[T](
         // batch before the checkpoint side effects (`processor.rs:1470-1475`).
         if (validated) collected.iterator else Iterator.empty
       }
-    }(itemEnc)
+    }
 
     // Drive exactly one action over the pass (T2 side effects must run once):
     // the caller's consumer if provided, else a no-op job for the stats.
-    // The coverage floor for the commit pass is the batch's own partition
-    // count: both mapPartitions keep it, and the maxConcurrentShards coalesce
-    // is already inside the batch. The batch is planned already, so this
-    // reads a number instead of planning the item Dataset a second time.
-    val plannedPartitions = batch.queryExecution.toRdd.getNumPartitions.toLong
     if (onItems.asInstanceOf[AnyRef] eq GraftProcessor.NoopItems) items.foreach(_ => ())
     else {
-      onItems(items, batchId)
+      onItems(session.createDataset(items)(itemEnc), batchId)
       // Coverage enforcement (ADVICE r4): a consumer running no action — or
       // a partial one (take/show/limit evaluate only some partitions) —
       // leaves shards whose CommitTasks never reached the accumulator:
@@ -247,7 +271,7 @@ final class GraftProcessor[T](
       // above is eager), so partition-count coverage is exact. On a gap,
       // one dedicated pass guarantees every shard commits; duplicate
       // CommitTasks collapse via the distinct below.
-      if (partsAcc.value < plannedPartitions) items.foreach(_ => ())
+      if (partsAcc.value < items.getNumPartitions) items.foreach(_ => ())
     }
 
     // Merge accumulator rows: identical duplicates (a consumer running >1
@@ -293,6 +317,27 @@ final class GraftProcessor[T](
     val durMs = (System.nanoTime() - t0) / 1000000L
     emitAll(ProcessingEventType.BatchComplete(
       commits.map(_.successCount).sum, commits.map(_.failCount).sum, durMs))
+  }
+
+  /** The batch's records: the shard ranges Spark planned for it, taken
+    * from the `MicroBatchScanExec` of the query's current execution (so
+    * `planInputPartitions` still runs once per batch), read as [[KRecord]]s
+    * and capped at `maxConcurrentShards` concurrent partitions. */
+  private def plannedRecords(query: StreamingQuery, sc: SparkContext): RDD[KRecord] = {
+    val scan = (query match {
+      case q: StreamingQueryWrapper => q.streamingQuery.lastExecution.executedPlan.collectFirst {
+        case s: MicroBatchScanExec if s.stream.isInstanceOf[GraftMicroBatchStream] => s
+      }
+      case _ => None
+    }).getOrElse(throw new IllegalStateException(
+      s"query '${query.name}' has no graft-stream scan in its micro-batch plan"))
+    val ranges = scan.inputPartitions.map(_.asInstanceOf[GraftInputPartition])
+    val rdd: RDD[KRecord] =
+      new ShardRangeRDD(sc, ranges, scan.longMetric("numOutputRows"))
+    // O3 concurrency cap: coalesce merges whole shard ranges (order within
+    // each shard preserved), bounding concurrent shard workers like the
+    // reference's Semaphore (`processor.rs:679-683`).
+    config.maxConcurrentShards.filter(_ => ranges.nonEmpty).fold(rdd)(rdd.coalesce(_))
   }
 
   /** O2 — run until drained (AvailableNow), shutdown, or total timeout

@@ -110,7 +110,7 @@ object EventSink {
     *
     * `emit` looks the id up in the registry on every call. Hot paths resolve
     * the handle once instead, with [[EventSink.resolve]]: the engine does so
-    * once per partition in `RecordProcessing.process` and once per source
+    * once per partition in `RecordProcessing.processPartition` and once per source
     * reader, so a sink registered or unregistered while a partition runs
     * takes effect from the next partition on. */
   final case class Registered(id: String) extends EventSink {

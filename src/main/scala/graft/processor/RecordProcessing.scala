@@ -50,21 +50,31 @@ object RecordProcessing {
       config: ProcessorConfig,
       sink: EventSink = EventSink.Noop,
       shutdown: ShutdownSignal = ShutdownSignal.never
-  )(implicit enc: Encoder[Processed[T]]): Dataset[Processed[T]] = {
+  )(implicit enc: Encoder[Processed[T]]): Dataset[Processed[T]] =
+    ds.mapPartitions((it: Iterator[KRecord]) => processPartition(it, processor, config, sink, shutdown))
+
+  /** The per-partition pass [[process]] maps over a Dataset and the engine
+    * over its record RDD: one watchdog per partition, the sink resolved once,
+    * and the retry loop per record, streaming through the iterator. */
+  def processPartition[T](
+      records: Iterator[KRecord],
+      processor: RecordProcessor[T],
+      config: ProcessorConfig,
+      sink: EventSink,
+      shutdown: ShutdownSignal = ShutdownSignal.never): Iterator[Processed[T]] = {
     val timeoutMs = config.processingTimeoutMs
-    ds.mapPartitions { iter =>
-      val watchdog = new PartitionWatchdog(timeoutMs)
-      Option(TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => watchdog.close()))
-      val target = EventSink.resolve(sink) // once per partition, not per event
-      // The deserializer builds a fresh shard-id String per record; events
-      // and rows carry one instance per run of a shard instead, so the
-      // sink's per-shard lookup hashes it once and matches it by reference.
-      var shardId: String = null
-      iter.map { rec =>
-        if (!rec.shardId.equals(shardId)) shardId = rec.shardId
-        retryLoop(rec, shardId, processor, timeoutMs, watchdog, target, shutdown)
-      }
+    val watchdog = new PartitionWatchdog(timeoutMs)
+    Option(TaskContext.get()).foreach(
+      _.addTaskCompletionListener[Unit](_ => watchdog.close()))
+    val target = EventSink.resolve(sink) // once per partition, not per event
+    // Records of one shard may each carry their own shard-id String (the
+    // Dataset deserializer makes a fresh one per record); events and rows
+    // carry one instance per run of a shard instead, so the sink's
+    // per-shard lookup hashes it once and matches it by reference.
+    var shardId: String = null
+    records.map { rec =>
+      if (!rec.shardId.equals(shardId)) shardId = rec.shardId
+      retryLoop(rec, shardId, processor, timeoutMs, watchdog, target, shutdown)
     }
   }
 

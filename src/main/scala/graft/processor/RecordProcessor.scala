@@ -21,6 +21,10 @@ import graft.core._
   * The reference is async (tokio); here the callback runs synchronously on
   * the partition's processing thread — Spark's per-partition iterator is the
   * ordering boundary exactly like the reference's per-shard task.
+  *
+  * Under [[graft.engine.GraftProcessor]] `record` is the object the source
+  * client returned, `data` array included: treat it as read-only, since a
+  * change would reach the client's copy and any replay of the record.
   */
 trait RecordProcessor[T] extends Serializable {
 

@@ -4,6 +4,8 @@ import java.util.{Map => JMap}
 
 import scala.collection.mutable
 
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -13,6 +15,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.AccumulatorV2
 
 import graft.core._
 import graft.monitoring.{EventSink, IteratorEventType, ProcessingEvent, ProcessingEventType}
@@ -295,7 +298,12 @@ final class GraftReaderFactory extends PartitionReaderFactory {
   * and never loses the range tail: a rung landing AHEAD of the cursor is
   * clamped back to it (forward re-anchoring only happens when the cursor's
   * index itself is no longer retained, and then it is surfaced as a
-  * Renewed event carrying the skipped range). */
+  * Renewed event carrying the skipped range).
+  *
+  * Two ways out of the reader: `get()` encodes the current record as a
+  * Spark row (the `graft-stream` source for plain `readStream` users), and
+  * `record` hands over the client's own [[KRecord]] unchanged (the engine's
+  * path, through [[ShardRangeRDD]], which encodes nothing). */
 final class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader[InternalRow] {
 
   private val client: IndexedSourceClient =
@@ -401,6 +409,9 @@ final class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader
         client.getShardIterator(p.streamName, p.shardId, ShardIteratorType.TrimHorizon))
     }
 
+  /** The current record as the client returned it. */
+  def record: KRecord = current
+
   override def get(): InternalRow = {
     val r = current
     new GenericInternalRow(Array[Any](
@@ -414,3 +425,33 @@ final class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader
 
   override def close(): Unit = ()
 }
+
+/** A micro-batch's planned shard ranges read as the client's [[KRecord]]s:
+  * one partition per [[GraftInputPartition]], each draining a
+  * [[GraftPartitionReader]] (same client resolution ladder, O7 renewal and
+  * events as the row source) through `record`, so no Spark row is built.
+  * Each record read is added to `recordsRead`: the engine passes the
+  * micro-batch scan's `numOutputRows`, which Spark's progress reports as
+  * `numInputRows`. */
+final class ShardRangeRDD(
+    sc: SparkContext,
+    // driver-side only: each task gets its own range through its partition
+    @transient private val ranges: Seq[GraftInputPartition],
+    recordsRead: AccumulatorV2[Long, Long]
+) extends RDD[KRecord](sc, Nil) {
+
+  override protected def getPartitions: Array[Partition] =
+    ranges.iterator.zipWithIndex.map { case (r, i) => ShardRangePartition(i, r): Partition }.toArray
+
+  override def compute(split: Partition, context: TaskContext): Iterator[KRecord] = {
+    val reader = new GraftPartitionReader(split.asInstanceOf[ShardRangePartition].range)
+    context.addTaskCompletionListener[Unit](_ => reader.close())
+    Iterator.continually(reader.next()).takeWhile(identity).map { _ =>
+      recordsRead.add(1L)
+      reader.record
+    }
+  }
+}
+
+private final case class ShardRangePartition(index: Int, range: GraftInputPartition)
+    extends Partition

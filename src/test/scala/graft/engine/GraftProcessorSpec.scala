@@ -13,7 +13,7 @@ import graft.monitoring.{EventSink, MetricsAggregator, ProcessingEvent, QueryLis
   ShardEventType, TestMonitoringHarness}
 import graft.monitoring.ProcessingEventType.ShardEvent
 import graft.processor.RecordProcessor
-import graft.sources.InMemorySourceClient
+import graft.sources.{GraftOffset, InMemorySourceClient}
 
 /** Orchestration + commit path, mirroring:
   * checkpoint recovery resume (`tests/test_suite2.rs:117-168`),
@@ -282,6 +282,61 @@ class GraftProcessorSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
+  test("numInputRows of every engine batch equals the records that batch admitted") {
+    val s = spark; import s.implicits._
+    // admission cap 4 x 3 = 12 per shard and batch: 3 shards of 30 records
+    // take three batches (12, 12, 6 per shard)
+    val shards = mkShards(3, 30)
+    val gp = new GraftProcessor[String](
+      ProcessorConfig("admitted", batchSize = 4, maxBatchRetrievalLoops = Some(3)),
+      new Echo, new InMemorySourceClient(shards), new InMemoryCheckpointStore,
+      onItems = (ds, _) => { ds.collect(); () })
+    val progress = try {
+      val query = gp.start(spark, tmp())
+      query.awaitTermination()
+      query.recentProgress.toSeq
+    } finally gp.cleanup()
+    def positions(json: String) =
+      GraftOffset.fromJson(Option(json).getOrElse("{}")).positions
+    val batches = progress.filter(_.numInputRows > 0)
+    batches.length shouldBe 3
+    progress.foreach { p =>
+      val src = p.sources.head
+      val (from, to) = (positions(src.startOffset), positions(src.endOffset))
+      p.numInputRows shouldBe to.map { case (k, v) => v - from.getOrElse(k, 0L) }.sum
+    }
+    progress.map(_.numInputRows).sum shouldBe 90L
+  }
+
+  test("every envelope field and payload byte reaches the record function, in shard order") {
+    val s = spark; import s.implicits._
+    val ts = new java.sql.Timestamp(1700000000123L)
+    // partition keys unlike the shard ids; hash key and arrival time each
+    // both absent and present
+    val shards = (0 until 5).map { sh =>
+      s"shard-$sh" -> (0 until 20).map(i => KRecord(f"$i%010d", s"user-${(sh * 7 + i) % 11}",
+        Array.tabulate[Byte](i % 6)(b => (b * 37 + sh - 128).toByte),
+        if (i % 3 == 0) None else Some(new java.sql.Timestamp(ts.getTime + i)),
+        s"shard-$sh", if (i % 2 == 0) None else Some(s"${BigInt(2).pow(127) - i}")))
+    }.toMap
+    def fields(r: KRecord) = (r.sequenceNumber, r.partitionKey, r.data.toSeq,
+      r.approximateArrivalTimestamp, r.shardId, r.explicitHashKey)
+    for (cap <- Seq(None, Some(2))) {
+      envelopes.clear()
+      new GraftProcessor[String](
+        ProcessorConfig("envelope", batchSize = 4, maxBatchRetrievalLoops = Some(2),
+          maxConcurrentShards = cap),
+        new Envelope, new InMemorySourceClient(shards), new InMemoryCheckpointStore)
+        .run(spark, tmp()) shouldBe Right(())
+      val seen = envelopes.toArray(Array.empty[KRecord]).toSeq
+      for ((shardId, recs) <- shards)
+        withClue(s"maxConcurrentShards=$cap, $shardId: ") {
+          seen.filter(_.shardId == shardId).map(fields) shouldBe recs.map(fields)
+        }
+      seen.length shouldBe 100
+    }
+  }
+
   test("minimum_batch_retrieval_time maps to the continuous trigger interval (SURVEY §4)") {
     GraftProcessor.continuousTrigger(
       ProcessorConfig("t", minimumBatchRetrievalTimeMs = 250L)) shouldBe
@@ -301,9 +356,17 @@ object GraftProcessorSpec {
   val collected = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val softValidatorCalls = new AtomicInteger(0)
   val flakySaves = new AtomicInteger(0)
+  val envelopes = new java.util.concurrent.ConcurrentLinkedQueue[KRecord]()
 
   final class Echo extends RecordProcessor[String] {
     override def processRecord(r: KRecord, m: RecordMetadata) = Right(Some(r.dataUtf8))
+  }
+
+  /** Keeps every record it is handed, as handed. */
+  final class Envelope extends RecordProcessor[String] {
+    override def processRecord(r: KRecord, m: RecordMetadata) = {
+      envelopes.add(r); Right(None)
+    }
   }
 
   final class HardOn50 extends RecordProcessor[String] {
