@@ -19,6 +19,10 @@ enforce, hard-failing like `cargo fmt --check` does:
     every session, in the program and in its specs, starts from
     `graft.GraftSession.builder`, so the session settings the results
     depend on live in one module
+  - no `.conf.set(` or `.conf.unset(` in src/main outside
+    src/main/scala/graft/analytics/StreamDrain.scala: a session's conf is
+    shared by every query on it, so the program changes it only across a
+    streaming query's start, under the drain helper's lock
 
 Exit 1 with a per-violation listing on any hit; exit 0 clean.
 """
@@ -28,6 +32,8 @@ import sys
 MAX_COLS = 120
 SESSION_BUILDER = "SparkSession.builder()"
 SESSION_MODULE = "src/main/scala/graft/GraftSession.scala"
+CONF_MUTATIONS = (".conf.set(", ".conf.unset(")
+DRAIN_MODULE = "src/main/scala/graft/analytics/StreamDrain.scala"
 
 
 def exempt(line: str) -> bool:
@@ -59,6 +65,10 @@ def main() -> int:
             if SESSION_BUILDER in line and f.startswith("src/") and f != SESSION_MODULE:
                 bad.append(f"{f}:{n}: {SESSION_BUILDER} outside {SESSION_MODULE} "
                            "(use graft.GraftSession.builder)")
+            if (any(m in line for m in CONF_MUTATIONS) and f.startswith("src/main/")
+                    and f != DRAIN_MODULE):
+                bad.append(f"{f}:{n}: session conf mutation outside {DRAIN_MODULE} "
+                           "(pass a per-query conf to StreamDrain or a per-write option)")
     if bad:
         print(f"[fmtcheck] {len(bad)} violation(s):", file=sys.stderr)
         for b in bad:

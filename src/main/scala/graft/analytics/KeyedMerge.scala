@@ -79,13 +79,13 @@ object KeyedMerge {
     */
   def applyChanges(dir: String, changes: DataFrame,
       keyCols: Seq[String], seqCols: Seq[String], numBuckets: Int): Unit = {
-    // CRITICAL: operate on the session that OWNS the change frame (there is
-    // deliberately no session parameter). Inside foreachBatch the micro-batch Dataset belongs
-    // to a CLONED session with an isolated SQLConf — setting
-    // partitionOverwriteMode on the outer session would leave the clone's
-    // write in STATIC mode, which deletes every untouched bucket of the
-    // table (found by DriverCrashSpec: the first batch that didn't touch
-    // all buckets silently dropped one).
+    // Operate on the session that OWNS the change frame (there is
+    // deliberately no session parameter): inside foreachBatch that is the
+    // query's CLONED session. The dynamic overwrite is an option of the
+    // write itself, so no session conf can turn it off — a STATIC-mode
+    // write deletes every untouched bucket of the table (found by
+    // DriverCrashSpec: the first batch that didn't touch all buckets
+    // silently dropped one).
     val s = changes.sparkSession
     val dataCols = changes.columns.toSeq.filterNot(_ == BucketCol)
     require(keyCols.forall(dataCols.contains), s"missing key cols in $dataCols")
@@ -129,14 +129,8 @@ object KeyedMerge {
       // and the commit metadata scales with buckets, not tasks×buckets.
       .repartition(math.min(touched.length, 4096), col(BucketCol))
 
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try winners.write.mode("overwrite").partitionBy(BucketCol).parquet(dir)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    winners.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(BucketCol).parquet(dir)
   }
 
   /** One-pass MERGE + CHANGE-DATA-FEED (VERDICT r13 #2): apply a change
@@ -226,14 +220,8 @@ object KeyedMerge {
         prefixed.map(c => when(col("__new_wins"), col(s"__new_$c"))
           .otherwise(col(s"__old_$c")).as(c)): _*)
         .repartition(math.min(touched.length, 4096), col(BucketCol))
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try winners.write.mode("overwrite").partitionBy(BucketCol).parquet(dir)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      winners.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(BucketCol).parquet(dir)
     } finally jc.unpersist()
     ()
   }

@@ -2,10 +2,12 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core._
 import graft.engine.GraftProcessor
 import graft.processor.RecordProcessor
+import StreamDrain.{drain, drainEach, statePartitions}
 
 /** The minimum end-to-end slice as a registered, oracle-checked query
   * (SURVEY §7 step 4): events.parquet → 8-shard KRecord stream → custom
@@ -28,49 +30,6 @@ object StreamingQueries {
     * shutdown-hook-cleaned, shared with the format round-trips
     * (see [[Scratch]]). */
   private def tempDir(prefix: String): String = Scratch.dir(prefix)
-
-  /** Streaming state-partition sizing. A stateful query's shuffle
-    * partition count is FROZEN into the state-store layout at the first
-    * checkpoint — Spark cannot AQE-coalesce it afterwards — so it is the
-    * one parallelism knob that must be sized to the data up front. Sized
-    * from the source table's on-disk bytes (≈16 MB of input per state
-    * partition, clamped to [4, session default]): at the gate SF this
-    * collapses 32 near-empty state-store instances per stateful operator
-    * (a stream-stream join keeps FOUR stores per partition — key-to-count
-    * and key-with-index per side — each writing delta files every
-    * micro-batch) down to 4; at 100 TB `bytes/16MB` dwarfs the core count
-    * and the clamp returns full session parallelism. Restored after the
-    * drain, so batch post-processing of the sink runs at session default.
-    *
-    * `mbPerPartition` is the operator-shape dial: the default 16 MB suits
-    * state-machinery-dominated queries (stream-stream joins, dedup,
-    * windowed aggs — fewer stores beat idle cores; s8 measured 8.8→5.8 s
-    * at sf10 with 11 partitions). Queries whose per-ROW compute dominates
-    * the store overhead (MinHash signatures, per-user event folds) pass 4:
-    * they regain full session cores at rehearsal SFs — sized-down runs
-    * measured s11 8→16 s, s12 13→17 s at sf10 — while the gate SF still
-    * collapses to the floor. */
-  /** The pure sizing rule (spec-pinned in StatePartitionsSpec): one
-    * partition per `mbPerPartition` of source bytes, floor 4, never above
-    * the session default. */
-  private[analytics] def statePartitionsFor(sessionDefault: Long,
-      tableBytes: Long, mbPerPartition: Int): Long =
-    math.min(sessionDefault, math.max(4L,
-      tableBytes / (mbPerPartition.toLong << 20) + 1))
-
-  private[analytics] def withStatePartitions[T](spark: SparkSession,
-      sfDir: String, table: String = "events", mbPerPartition: Int = 16)(
-      f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    def bytes(p: java.io.File): Long =
-      if (p.isDirectory) p.listFiles().map(bytes).sum else p.length()
-    val sized = statePartitionsFor(prev.toLong,
-      bytes(new java.io.File(s"$sfDir/$table.parquet")), mbPerPartition)
-    spark.conf.set(key, sized.toString)
-    try f
-    finally spark.conf.set(key, prev)
-  }
 
   /** Flush-token side stream: writes the tiny `rows` batch to scratch
     * parquet and re-reads it as a file stream, so a handful of +200-year
@@ -378,31 +337,25 @@ object StreamingQueries {
 
   /** s6 — Structured Streaming EVENT-TIME WINDOW aggregation under the
     * oracle gate: `readStream` over the events parquet → tumbling 1-day
-    * windows per event type → complete-mode memory sink, drained with
-    * `Trigger.AvailableNow`. The streaming execution of the q12 window
-    * family (incremental state store updates per micro-batch) must
-    * converge to exactly the batch aggregate — that convergence is what
-    * the DuckDB oracle pins. Complete mode keeps every window in state
-    * deliberately: the append/watermark path (bounded state, late-data
-    * eviction) is exercised by the watermark specs in `streaming/`, where
+    * windows per event type → complete mode, drained by [[StreamDrain]].
+    * The streaming execution of the q12 window family (incremental state
+    * store updates per micro-batch) must converge to exactly the batch
+    * aggregate — that convergence is what the DuckDB oracle pins.
+    * Complete mode keeps every window in state deliberately: the
+    * append/watermark path (bounded state, late-data eviction) is
+    * exercised by the watermark specs in `streaming/`, where
     * batch-boundary-dependent drops belong; an oracle-gated query must be
     * independent of micro-batch placement.
     *
     * Scale shape: per-batch partial aggregation into the state store
     * keyed by (window, type) — state is O(windows · types), not O(rows);
-    * the memory sink is the test harness, a real run writes to a table. */
-  def streamWindowCounts(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
-    val name = s"graft_s6_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+    * each batch overwrites the O(windows · types) output table. */
+  def streamWindowCounts(spark: SparkSession, sfDir: String): DataFrame = {
+    val counts = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
       .select(timestamp_micros(expr("ts div 1000")).as("tsx"), col("event_type"))
       .groupBy(window(col("tsx"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(counts, OutputMode.Complete(), Seq(statePartitions(spark, sfDir)))
       .select(unix_millis(col("window.start")).as("day_start"),
         col("event_type"), col("n_events"))
       .orderBy(col("day_start"), col("event_type"))
@@ -417,7 +370,7 @@ object StreamingQueries {
     * purchases read as two watermarked file streams, inner-joined on
     * user + the closed lookback window `[p_ts − 1h, p_ts]` (the
     * [[graft.streaming.StreamJoin.attributionJoin]] contract), drained
-    * with `Trigger.AvailableNow` into a memory sink. The drained pair
+    * with `Trigger.AvailableNow` into the file sink. The drained pair
     * set must equal the batch interval join — the output is checked
     * against p8's DuckDB `BETWEEN`-join oracle VERBATIM, closing the
     * last gap between the streaming operator family and the oracle gate
@@ -430,13 +383,7 @@ object StreamingQueries {
     * (p8) bins instead of relying on eviction — the right shape when
     * the data is at rest; this one is the right shape when it never
     * stops arriving. */
-  def streamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
-    // parquet sink, not a memory sink: the joined pair set is corpus-sized
-    // and a memory sink materializes it on the driver (the s12 sf30
-    // maxResultSize lesson — s7 learned it first)
-    val base = tempDir("graft_s8_")
+  def streamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
     def src = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
       .select(col("event_id"), col("user_id"),
         timestamp_micros(expr("ts div 1000")).as("tsx"), col("event_type"))
@@ -448,17 +395,14 @@ object StreamingQueries {
       .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
         col("tsx").as("p_ts"))
       .withWatermark("p_ts", "1 hour")
-    val q = purchases.join(clicks,
+    val pairs = purchases.join(clicks,
         col("c_user") === col("p_user") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
       .select(col("p_id"), col("p_user").as("user_id"), col("click_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-      .writeStream.format("parquet")
-      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$base/out").orderBy(col("p_id"), col("click_id"))
+    drain(pairs, OutputMode.Append(), Seq(statePartitions(spark, sfDir)))
+      .orderBy(col("p_id"), col("click_id"))
   }
 
   /** s9 — STREAMING SESSIONIZATION under the oracle gate: `session_window`
@@ -473,25 +417,16 @@ object StreamingQueries {
     *
     * Scale shape: session-window state is O(open sessions) per user in
     * the state store; merges happen store-side per micro-batch. */
-  def streamSessions(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamSessions(spark: SparkSession, sfDir: String): DataFrame = {
     val gapMs = 6L * 3600 * 1000
-    // complete-mode output is the FULL session set (corpus-scaled) — land
-    // it executor-parallel via foreachBatch overwrite instead of a driver
-    // memory sink (the s7 r9 lesson); the last epoch's overwrite IS the
-    // complete result, independent of micro-batch placement.
-    val outDir = s"${tempDir("graft_s9_")}/out"
-    val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+    // complete-mode output is the FULL session set (corpus-scaled); the
+    // last epoch's overwrite IS the complete result, independent of
+    // micro-batch placement.
+    val sessions = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
       .select(col("user_id"), timestamp_micros(expr("ts div 1000")).as("tsx"))
       .groupBy(session_window(col("tsx"), "6 hours"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
-      .writeStream
-      .foreachBatch((df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(outDir))
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    drain(sessions, OutputMode.Complete(), Seq(statePartitions(spark, sfDir)))
       .select(col("user_id"), col("n_events"),
         (unix_millis(col("session_window.end")) -
           unix_millis(col("session_window.start")) - gapMs).as("span_ms"))
@@ -514,37 +449,25 @@ object StreamingQueries {
     * controlled; this query pins the exactness contract.
     *
     * Scale shape: dedup state is keyed by event_id in the state store;
-    * the memory sink receives deduped rows (append), aggregated in batch
+    * the file sink receives deduped rows (append), aggregated in batch
     * after the drain so the oracle comparison is placement-independent. */
-  def streamDedup(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
-    // parquet sink, not a memory sink: the deduped stream is corpus-sized
-    // (every surviving event), and a memory sink materializes it on the
-    // DRIVER — measured 27 s of the 10 M-row sf10 drain (SCALE.md r9).
-    // The executor-parallel file sink is also the honest 100 TB shape;
-    // the re-read respects `_spark_metadata` (s10's contract).
-    val base = tempDir("graft_s7_")
-    val q = eventsFileStream(spark, sfDir)
+  def streamDedup(spark: SparkSession, sfDir: String): DataFrame = {
+    val deduped = eventsFileStream(spark, sfDir)
       .withColumn("copy", explode(array(lit(1), lit(2))))
       .select(col("event_id"), col("event_type"))
       .dropDuplicates("event_id")
-      .writeStream.format("parquet")
-      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$base/out")
+    drain(deduped, OutputMode.Append(), Seq(statePartitions(spark, sfDir)))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .orderBy(col("event_type"))
   }
 
   /** s10 — EXACTLY-ONCE FILE SINK under the oracle gate: the production
-    * sink path (memory sinks are test scaffolding). The events stream is
-    * written to a parquet directory through the transactional file sink,
-    * then the SAME query (same checkpoint) is started a second time — an
-    * operator restart. The second run must commit NOTHING new: the sink's
-    * `_spark_metadata` commit log is what a metadata-aware re-read
+    * sink path. The events stream is written to a parquet directory
+    * through the transactional file sink, then the SAME query (same
+    * checkpoint) is started a second time — an operator restart. The
+    * second run must commit NOTHING new: the sink's `_spark_metadata`
+    * commit log is what a metadata-aware re-read
     * respects, so the final aggregate equals the batch count IFF (a) the
     * first drain committed every row exactly once and (b) the restart was
     * a no-op. Either a dropped batch, a double-committed batch, or a
@@ -554,20 +477,13 @@ object StreamingQueries {
     * commit lock); re-reads prune to committed files via the metadata
     * log. State: none beyond source offsets in the checkpoint. */
   def streamFileSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tempDir("graft_s10_")
-    val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    def runOnce(): Unit = {
-      val q = eventsFileStream(spark, sfDir)
-        .select(col("event_id"), col("event_type"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    runOnce()
-    runOnce() // restart with the same checkpoint: must commit nothing new
-    spark.read.parquet(out) // respects _spark_metadata: committed files only
+    val events = eventsFileStream(spark, sfDir)
+      .select(col("event_id"), col("event_type"))
+    drain(events, OutputMode.Append(), base = base)
+    // restart with the same checkpoint: must commit nothing new; the
+    // re-read respects _spark_metadata: committed files only
+    drain(events, OutputMode.Append(), base = base)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .orderBy(col("event_type"))
@@ -588,10 +504,7 @@ object StreamingQueries {
     * evicts mid-drain, so the output is micro-batch-placement-independent
     * (the s6/s9 oracle-gating discipline; eviction under lateness is
     * spec-gated in StreamingNearDupSpec). */
-  def streamNearDup(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir, table = "documents", mbPerPartition = 4) {
-    import org.apache.spark.sql.streaming.Trigger
-    val name = s"graft_s11_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+  def streamNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     val nBench = 64L
     val stream = tableFileStream(spark, sfDir, "documents")
       .filter(col("doc_id") >= nBench)
@@ -600,11 +513,9 @@ object StreamingQueries {
     val corpus = Tables.documents(spark, sfDir)
       .filter(col("doc_id") < nBench)
       .select(col("doc_id"), col("text"))
-    val q = NearDup.streamingNearDup(stream, corpus, tsCol = "arrival_ts")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(NearDup.streamingNearDup(stream, corpus, tsCol = "arrival_ts"),
+        OutputMode.Append(),
+        Seq(statePartitions(spark, sfDir, table = "documents", mbPerPartition = 4)))
       .select(col("doc_id"), col("match_id").as("bench_id"), col("jaccard"))
       .orderBy(col("doc_id"), col("bench_id"))
   }
@@ -631,18 +542,12 @@ object StreamingQueries {
     *   - gapMs = gap − 1 ms: closedSessions merges at diff ≤ gapMs while
     *     `session_window`/the oracle break at diff ≥ gap; on integer
     *     milliseconds the two coincide exactly. */
-  def streamStatefulSessions(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir, mbPerPartition = 4) {
-    import org.apache.spark.sql.streaming.Trigger
+  def streamStatefulSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.streaming.Sessionize
     import spark.implicits._
     val gapMs = 6L * 3600 * 1000
     val shiftMs = FlushShiftMs
     val realBefore = RealBeforeMs
-    // parquet sink, not a memory sink: the closed-session set is
-    // corpus-sized — the memory sink materialized it on the driver and
-    // breached spark.driver.maxResultSize at sf30 (r11 decade check)
-    val base = tempDir("graft_s12_")
     val real = Tables.normalizeEventTs(
         tableFileStream(spark, sfDir, "events", singleBatch = true))
       .select(col("user_id").as("userId"), col("event_type").as("eventType"),
@@ -658,13 +563,8 @@ object StreamingQueries {
         timestamp_millis(lit(maxMs + shiftMs)).as("ts"))
     val events = real.unionByName(tokenStream(spark, tokens))
       .as[Sessionize.UserEvent]
-    val q = Sessionize.closedSessions(events, gapMs = gapMs - 1)
-      .toDF()
-      .writeStream.format("parquet")
-      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$base/out")
+    drain(Sessionize.closedSessions(events, gapMs = gapMs - 1).toDF(),
+        OutputMode.Append(), Seq(statePartitions(spark, sfDir, mbPerPartition = 4)))
       .filter(col("sessionStartMs") < realBefore) // drop the flush copies
       .groupBy(col("userId"))
       .agg(count(lit(1)).as("n_sessions"),
@@ -681,32 +581,18 @@ object StreamingQueries {
     * `ValueState[Long]` per user and emits the running total each batch;
     * the LAST emission per user must equal the batch per-user count —
     * correct across ANY micro-batch placement (each batch re-emits the
-    * updated total), so the oracle needs no single-batch pin. */
-  def streamRunningCounts(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
+    * updated total), so the oracle needs no single-batch pin. The max
+    * over the appended emissions is that last one, and a replayed batch
+    * cannot change it. */
+  def streamRunningCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.streaming.Sessionize
     import spark.implicits._
-    val name = s"graft_s13_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
-        .select(col("user_id").as("userId"), col("event_type").as("eventType"),
-          timestamp_micros(expr("ts div 1000")).as("ts"))
-        .as[Sessionize.UserEvent]
-      val q = Sessionize.runningCounts(events)
-        .toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    spark.table(name)
+    val events = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+      .select(col("user_id").as("userId"), col("event_type").as("eventType"),
+        timestamp_micros(expr("ts div 1000")).as("ts"))
+      .as[Sessionize.UserEvent]
+    drain(Sessionize.runningCounts(events).toDF(), OutputMode.Update(),
+        Seq(statePartitions(spark, sfDir), StreamDrain.RocksDB))
       .groupBy(col("userId"))
       .agg(max(col("nEvents")).as("n_events")) // last emission = running max
       .select(col("userId").as("user_id"), col("n_events"))
@@ -724,34 +610,18 @@ object StreamingQueries {
     * are monotone, so `max` over emissions = each user's final count
     * regardless of micro-batch placement, and the drained top-5 per type
     * (count desc, user_id tie-break) equals the batch leaderboard. */
-  def streamTopK(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir, mbPerPartition = 4) {
+  def streamTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.{HeavyHitters, Sessionize}
     import spark.implicits._
-    val name = s"graft_s14_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
-        .select(col("user_id").as("userId"), col("event_type").as("eventType"),
-          timestamp_micros(expr("ts div 1000")).as("ts"))
-        .as[Sessionize.UserEvent]
-      val q = HeavyHitters.typeUserCounts(events)
-        .toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val events = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
+      .select(col("user_id").as("userId"), col("event_type").as("eventType"),
+        timestamp_micros(expr("ts div 1000")).as("ts"))
+      .as[Sessionize.UserEvent]
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("n").desc, col("user_id"))
-    spark.table(name)
+    drain(HeavyHitters.typeUserCounts(events).toDF(), OutputMode.Update(),
+        Seq(statePartitions(spark, sfDir, mbPerPartition = 4), StreamDrain.RocksDB))
       .groupBy(col("eventType"), col("userId"))
       .agg(max(col("n")).as("n")) // monotone → last emission
       .select(col("eventType").as("event_type"), col("userId").as("user_id"),
@@ -792,12 +662,7 @@ object StreamingQueries {
     * s8 (clicks held 1 h + delay, purchases held until their window
     * closes); the null-row scan rides the eviction pass, so an
     * always-on deployment holds O(window) state per user, never O(stream). */
-  def streamLeftOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
-    withStatePartitions(spark, sfDir) {
-    import org.apache.spark.sql.streaming.Trigger
-    // parquet sink, not a memory sink: the outer-joined pair set is
-    // corpus-sized (the s12 sf30 maxResultSize lesson)
-    val base = tempDir("graft_s15_")
+  def streamLeftOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val shiftUs = FlushShiftMs * 1000L
     val realBeforeUs = RealBeforeMs * 1000L
     // ONE +200y token per SIDE (not the r8 copy-of-every-event explode,
@@ -830,7 +695,7 @@ object StreamingQueries {
       .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
         col("tsx").as("p_ts"))
       .withWatermark("p_ts", "1 hour")
-    val q = purchases.join(clicks,
+    val pairs = purchases.join(clicks,
         col("c_user") === col("p_user") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"),
@@ -838,11 +703,7 @@ object StreamingQueries {
       .select(col("p_id"), col("p_user").as("user_id"), col("click_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"),
         unix_micros(col("p_ts")).as("p_us"))
-      .writeStream.format("parquet")
-      .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(s"$base/out")
+    drain(pairs, OutputMode.Append(), Seq(statePartitions(spark, sfDir)))
       .filter(col("p_us") < realBeforeUs) // drop the flush copies
       .select(col("p_id"), col("user_id"), col("click_id"), col("gap_us"))
       .orderBy(col("p_id"), col("click_id"))
@@ -924,7 +785,6 @@ object StreamingQueries {
     * e4/e9 index family: codebook broadcast, partial aggregation per
     * micro-batch, complete-mode overwrite of a 16-row summary. */
   def streamAnnIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     graft.functions.GraftFunctions.register(spark)
     val nCells = 16
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -937,8 +797,7 @@ object StreamingQueries {
       // per micro-batch; this one is row-group-pruned and cheap, but the
       // codebook of a streaming ANN index must not drift mid-stream
       .localCheckpoint()
-    val outDir = s"${tempDir("graft_s17_")}/out"
-    val q = tableFileStream(spark, sfDir, "embeddings")
+    val cells = tableFileStream(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .crossJoin(broadcast(codebook))
       .select(col("vec_id"), expr(
@@ -947,12 +806,7 @@ object StreamingQueries {
           .stripMargin).as("cell_id"))
       .groupBy(col("cell_id"))
       .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("id_checksum"))
-      .writeStream
-      .foreachBatch((df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(outDir))
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    drain(cells, OutputMode.Complete())
       .select(col("cell_id"), col("n_vectors"), col("id_checksum"))
       .orderBy(col("cell_id"))
   }
@@ -992,9 +846,8 @@ object StreamingQueries {
     *
     * Scale shape: the broadcast is ≤1024 map entries regardless of
     * corpus size; scoring is one codegen'd hash pass + a per-row HOF
-    * fold; the sink is executor-parallel parquet append. */
+    * fold; the sink is the executor-parallel, exactly-once file sink. */
   def streamDsirScore(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     graft.functions.GraftFunctions.register(spark)
     // r14: the λ table comes from the shared trained-artifact stage
     // (TextAnalytics.stagedDsirLambda — t17 consumes the same table), so
@@ -1010,8 +863,7 @@ object StreamingQueries {
       // materializes the 1-row map once; per-batch re-eval is then an
       // RDD scan of one row — the "frozen λ map" the contract promises.
       .localCheckpoint()
-    val outDir = s"${tempDir("graft_s18_")}/out"
-    val q = tableFileStream(spark, sfDir, "documents")
+    val scored = tableFileStream(spark, sfDir, "documents")
       .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
       .crossJoin(broadcast(lam))
@@ -1023,12 +875,7 @@ object StreamingQueries {
         expr("aggregate(lams, 0L, (a, x) -> a + x)").as("importance"))
       .withColumn("mean_lambda",
         col("importance").cast("double") / col("n_feats"))
-      .writeStream
-      .foreachBatch((df: DataFrame, _: Long) =>
-        df.write.mode("append").parquet(outDir))
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
+    drain(scored, OutputMode.Append())
       .select(col("doc_id"), col("n_feats"), col("importance"),
         col("mean_lambda"))
       .orderBy(col("doc_id"))
@@ -1051,21 +898,14 @@ object StreamingQueries {
     * of it, one bucket equi-join, scalar totals broadcast). The corpus
     * text never shuffles — only (source, bucket) pairs do. */
   def streamDriftAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     graft.functions.GraftFunctions.register(spark)
-    val outDir = s"${tempDir("graft_s21_")}/out"
-    val q = tableFileStream(spark, sfDir, "documents")
+    val counts = tableFileStream(spark, sfDir, "documents")
       .select(col("source"), explode(expr(
         """transform(graft_md5_prefix_hashes(split(lower(text), ' ')),
           |  t -> t % 1024)""".stripMargin)).as("bucket"))
       .groupBy(col("source"), col("bucket"))
       .agg(count(lit(1)).as("cs"))
-      .writeStream
-      .foreachBatch((df: DataFrame, _: Long) =>
-        df.write.mode("overwrite").parquet(outDir))
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    Views.sql(spark, spark.read.parquet(outDir), "graft_s21_sb_v",
+    Views.sql(spark, drain(counts, OutputMode.Complete()), "graft_s21_sb_v",
       s"""WITH c AS (SELECT bucket, sum(cs) AS c FROM graft_s21_sb_v
         |  GROUP BY bucket),
         |tots AS (SELECT sum(cs) AS t_total FROM graft_s21_sb_v),
@@ -1303,15 +1143,13 @@ object StreamingQueries {
     * partitioned dynamic overwrite); nothing corpus-sized shuffles;
     * bucket count self-scales from the corpus row count. */
   def s20StreamKeyedMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tempDir("graft_s20_")
-    val dir = s"$base/table"; val ckpt = s"$base/ckpt"
+    val dir = s"$base/table"
     val numBuckets = math.max(8L,
       math.min(4096L, Tables.events(spark, sfDir).count() / 50000L)).toInt
-    def runOnce(): Unit = {
-      val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
+    def runOnce(): Unit =
+      drainEach(Tables.normalizeEventTs(eventsFileStream(spark, sfDir)), base) {
+        (b: DataFrame, _: Long) =>
           val ch = b.select(col("user_id"),
             expr("ts div 1000").as("tsu"), col("event_id"),
             when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
@@ -1320,11 +1158,7 @@ object StreamingQueries {
           KeyedMerge.applyChanges(dir, ch,
             keyCols = Seq("user_id"), seqCols = Seq("tsu", "event_id"),
             numBuckets = numBuckets)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+      }
     runOnce()
     runOnce() // restart on the same checkpoint: zero batches re-applied
     KeyedMerge.read(spark, dir)
@@ -1364,23 +1198,17 @@ object StreamingQueries {
     * suites and leftover dirs from earlier sessions). */
   def s22StreamVersionedIngestAt(spark: SparkSession, sfDir: String,
       base: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val dir = s"$base/table"; val ckpt = s"$base/ckpt"
-    def runOnce(): Unit = {
-      val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
+    val dir = s"$base/table"
+    def runOnce(): Unit =
+      drainEach(Tables.normalizeEventTs(eventsFileStream(spark, sfDir)), base) {
+        (b: DataFrame, batchId: Long) =>
           val ch = b.select(col("user_id"),
             expr("ts div 1000").as("tsu"), col("event_id"),
             when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
               .as(VersionedTable.OpCol),
             col("event_type").as("last_type"), col("value").as("last_value"))
           VersionedTable.commitDelta(dir, ch, batchId)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+      }
     runOnce()
     runOnce() // restart on the same checkpoint: zero deltas re-committed
     VersionedTable
@@ -1408,12 +1236,10 @@ object StreamingQueries {
     * BOUNDED file set — the read-amplification counter-move measured at
     * 200 deltas in SinkSoakSpec, here gated under live interleaving. */
   def s23StreamCompactedIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tempDir("graft_s23_")
-    val dir = s"$base/table"; val ckpt = s"$base/ckpt"
-    val q = Tables.normalizeEventTs(eventsFileStream(spark, sfDir))
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+    val dir = s"$base/table"
+    drainEach(Tables.normalizeEventTs(eventsFileStream(spark, sfDir)), base) {
+      (b: DataFrame, batchId: Long) =>
         val ch = b.select(col("user_id"),
           expr("ts div 1000").as("tsu"), col("event_id"),
           when(col("event_type") === "error", lit("d")).otherwise(lit("u"))
@@ -1423,10 +1249,7 @@ object StreamingQueries {
         if (batchId % 4L == 3L)
           VersionedTable.compactUpTo(spark, dir, batchId,
             Seq("user_id"), Seq("tsu", "event_id"))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
     VersionedTable
       .readAsOf(spark, dir, Seq("user_id"), Seq("tsu", "event_id"),
         Long.MaxValue)
@@ -1496,10 +1319,9 @@ object StreamingQueries {
     * The oracle's 6× corpus blowup (every version × every row) is
     * oracle-only. */
   def s24StreamChangeFeed(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = tempDir("graft_s24_")
     val drops = s"$base/drops"; val state = s"$base/state"
-    val feed = s"$base/feed"; val ckpt = s"$base/ckpt"
+    val feed = s"$base/feed"
     new java.io.File(drops).mkdirs()
     val op = KeyedMerge.OpCol
     val ch0 = Tables.events(spark, sfDir).select(col("user_id"),
@@ -1549,11 +1371,9 @@ object StreamingQueries {
       dst.toFile.setLastModified(1600000000000L + k * 60000L)
       ()
     }
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(drops)
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+    drainEach(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(drops), base) {
+      (b: DataFrame, batchId: Long) =>
         // one-pass merge + feed (KeyedMerge.applyChangesWithDiff): one
         // state read serves both the classification and the LWW merge;
         // the feed publishes FIRST via the batchId-keyed idempotent
@@ -1585,10 +1405,7 @@ object StreamingQueries {
           VersionedTable.commitDelta(feed, feedRows, batchId)
         }
         ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
     spark.read.parquet(feed).drop("delta")
       .orderBy(col("version"), col("user_id"))
   }

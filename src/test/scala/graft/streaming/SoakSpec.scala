@@ -77,6 +77,11 @@ class SoakSpec extends AnyFunSuite with Matchers
     // retain few versions and sweep old ones aggressively
     .config("spark.sql.streaming.minBatchesToRetain", "20")
     .config("spark.sql.streaming.stateStore.maintenanceInterval", "5s")
+    // afterAll's StateStore.stop() can wait out the maintenance pool's
+    // shutdown timeout (a maintenance thread blocks on the lock stop()
+    // holds); the pool reads it when this suite restarts maintenance, so
+    // bound the teardown stall to seconds instead of the default 300 s
+    .config("spark.sql.streaming.stateStore.maintenanceShutdownTimeout", "5s")
     .getOrCreate()
 
   private def dirSize(f: File): Long =
