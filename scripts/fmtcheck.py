@@ -20,9 +20,12 @@ enforce, hard-failing like `cargo fmt --check` does:
     `graft.GraftSession.builder`, so the session settings the results
     depend on live in one module
   - no `.conf.set(` or `.conf.unset(` in src/main outside
-    src/main/scala/graft/analytics/StreamDrain.scala: a session's conf is
+    src/main/scala/graft/engine/QueryStart.scala: a session's conf is
     shared by every query on it, so the program changes it only across a
-    streaming query's start, under the drain helper's lock
+    streaming query's start, under the start helper's lock
+  - no `option("checkpointLocation"` in src/main outside the same module:
+    every streaming query starts through that helper, so its per-query
+    settings (confs, the local checkpoint file manager) reach them all
 
 Exit 1 with a per-violation listing on any hit; exit 0 clean.
 """
@@ -33,7 +36,8 @@ MAX_COLS = 120
 SESSION_BUILDER = "SparkSession.builder()"
 SESSION_MODULE = "src/main/scala/graft/GraftSession.scala"
 CONF_MUTATIONS = (".conf.set(", ".conf.unset(")
-DRAIN_MODULE = "src/main/scala/graft/analytics/StreamDrain.scala"
+CHECKPOINT_OPTION = 'option("checkpointLocation"'
+START_MODULE = "src/main/scala/graft/engine/QueryStart.scala"
 
 
 def exempt(line: str) -> bool:
@@ -65,10 +69,13 @@ def main() -> int:
             if SESSION_BUILDER in line and f.startswith("src/") and f != SESSION_MODULE:
                 bad.append(f"{f}:{n}: {SESSION_BUILDER} outside {SESSION_MODULE} "
                            "(use graft.GraftSession.builder)")
-            if (any(m in line for m in CONF_MUTATIONS) and f.startswith("src/main/")
-                    and f != DRAIN_MODULE):
-                bad.append(f"{f}:{n}: session conf mutation outside {DRAIN_MODULE} "
-                           "(pass a per-query conf to StreamDrain or a per-write option)")
+            if f.startswith("src/main/") and f != START_MODULE:
+                if any(m in line for m in CONF_MUTATIONS):
+                    bad.append(f"{f}:{n}: session conf mutation outside {START_MODULE} "
+                               "(pass a per-query conf to QueryStart or a per-write option)")
+                if CHECKPOINT_OPTION in line:
+                    bad.append(f"{f}:{n}: streaming query started outside {START_MODULE} "
+                               "(start it through graft.engine.QueryStart)")
     if bad:
         print(f"[fmtcheck] {len(bad)} violation(s):", file=sys.stderr)
         for b in bad:

@@ -29,6 +29,16 @@ object SparkEntry {
     * bump it in the same commit that registers a new query. */
   val expectedQueryCount: Int = 203
 
+  /** Stands, in an oracle, for the files the entry's result reads when
+    * these are landed by the entry itself (s19's event log, in its scratch
+    * dir). Verify keeps a copy of them in the entry's dump, at
+    * [[inputsDir]], and writes that path into the oracle. */
+  val EntryInputs = "@entry_inputs@"
+
+  /** The copy of an entry's inputs in its dump at `dumpDir`: `_`-prefixed,
+    * so Spark, pyarrow and a `*.parquet` glob over the dump skip it. */
+  def inputsDir(dumpDir: String): String = s"$dumpDir/_inputs"
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -35,9 +35,17 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        if (SparkEntry.oracleSql.get(name).exists(_.contains(SparkEntry.EntryInputs))) {
+          val to = Files.createDirectories(Paths.get(SparkEntry.inputsDir(s"$outDir/$name")))
+          df.inputFiles.foreach { f =>
+            val from = Paths.get(new java.net.URI(f))
+            Files.copy(from, to.resolve(from.getFileName))
+          }
+        }
+      } catch { case e: Throwable =>
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -58,7 +66,9 @@ object Verify {
     } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${q(k)}: ${q(v.replace(SparkEntry.EntryInputs,
+        SparkEntry.inputsDir(Paths.get(s"$outDir/$k").toAbsolutePath.toString)))}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failJson = failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }
       .mkString("{", ",", "}")

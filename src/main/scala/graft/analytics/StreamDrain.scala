@@ -3,11 +3,10 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
-/** The one place a registered streaming entry starts its own
-  * `writeStream` query (the `GraftProcessor` entries start theirs in the
-  * engine). Each query drains its source with `Trigger.AvailableNow` under
-  * a scratch base that holds its checkpoint (`base/ckpt`) and, for the
-  * row sinks, its output (`base/out`):
+/** Drains a registered streaming entry's `writeStream` query. Each query
+  * drains its source with `Trigger.AvailableNow` under a scratch base that
+  * holds its checkpoint (`base/ckpt`) and, for the row sinks, its output
+  * (`base/out`):
   *   - append mode writes the exactly-once file sink, whose re-read
   *     respects `_spark_metadata`;
   *   - complete mode overwrites `out` in each batch, so the last batch's
@@ -20,18 +19,13 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   * drain spent 27 s there; s12's breached `spark.driver.maxResultSize`
   * at sf30) and leaves a temp view behind after every run.
   *
-  * Per-query confs (the state-partition count, the state-store provider)
-  * reach only their query. `StreamExecution`'s constructor clones the
-  * session (`cloneSession()`, Spark 4.1.2), and the offset log and every
-  * batch read that clone. So the confs are set on the caller's session
-  * only across `start()`, under one JVM-wide lock, and restored before
-  * the lock is released. Every start here takes the lock, with or without
-  * confs of its own, so no drained query clones another one's values;
-  * code that reads the session outside the lock (batch entries, the
-  * `GraftProcessor` entries) can still see them during that one call.
-  * Queries stay on the caller's session rather than a `newSession()`
-  * child: a child has its own `spark.streams` listener bus, and
-  * `Tables`, [[StageCache]] and the source-schema memo key on the session. */
+  * Every query starts through [[graft.engine.QueryStart]], the one start
+  * path it shares with the `GraftProcessor` entries: per-query confs (the
+  * state-partition count, the state-store provider) reach only their
+  * query, and a `file:` checkpoint gets a checkpoint file manager that
+  * forks no `chmod`/`readlink` per offset-log, commit-log or state-store
+  * write, as Spark's default manager does without libhadoop. Other schemes
+  * and a session that names a manager keep Spark's choice. */
 private[graft] object StreamDrain {
 
   /** Streaming state-partition sizing. A stateful query's shuffle
@@ -77,10 +71,6 @@ private[graft] object StreamDrain {
   val RocksDB: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Held across every start and conf swap; specs that read the caller's
-    * conf while queries start take it too. */
-  private[analytics] val startLock = new Object
-
   /** Drains `df` in `mode` and returns its output, re-read from `base/out`. */
   def drain(df: DataFrame, mode: OutputMode, confs: Seq[(String, String)] = Nil,
       base: String = Scratch.dir("graft_drain_")): DataFrame = {
@@ -101,20 +91,7 @@ private[graft] object StreamDrain {
     run(df.sparkSession, df.writeStream.foreachBatch(f), base, Nil)
 
   private def run(spark: SparkSession, w: DataStreamWriter[Row], base: String,
-      confs: Seq[(String, String)]): Unit = {
-    val q = startLock.synchronized {
-      // explicit settings only, so an unset key is unset again, not pinned
-      // to its default
-      val set = spark.conf.getAll
-      val prev = confs.map { case (k, _) => k -> set.get(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try w.option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-    q.awaitTermination()
-  }
+      confs: Seq[(String, String)]): Unit =
+    graft.engine.QueryStart(spark, w, s"$base/ckpt", Trigger.AvailableNow(), confs)
+      .awaitTermination()
 }

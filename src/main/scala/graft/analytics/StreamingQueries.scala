@@ -992,8 +992,9 @@ object StreamingQueries {
     * mirror (driver/executor-local queues, `processor.rs:456-465`); the
     * landed log is corpus-sized and the fold over it is the declarative
     * partial+final windowed aggregation — the 100 TB metrics path. The
-    * log path is pinned (conf `spark.graft.s19.eventLogDir`) so the
-    * external oracle can read the identical bytes.
+    * log lands in the entry's own scratch dir, and the returned fold reads
+    * only it; the oracle refolds a copy of those files (its
+    * [[graft.SparkEntry.EntryInputs]]), so it reads the identical bytes.
     *
     * Driver memory is O(backlog bound), NOT O(corpus) (r11): DEDICATED
     * consumer threads — the reference's spawned mpsc reader,
@@ -1014,8 +1015,7 @@ object StreamingQueries {
     // the bound is a counter, not a preallocation — memory is used only
     // while a burst is actually backed up (sf1's whole run is ~4M events)
     val bounded = new EventSink.Bounded(capacity = (1 << 24) + 65536)
-    val logDir = spark.conf.getOption("spark.graft.s19.eventLogDir")
-      .getOrElse("/tmp/graft_s19_eventlog")
+    val logDir = s"$tmp/eventlog"
     val spillDir = new java.io.File(tmp, "evspill")
     spillDir.mkdirs()
     @volatile var engineDone = false
@@ -1105,7 +1105,7 @@ object StreamingQueries {
   }
 
   val s19Oracle: String =
-    """WITH ev AS (SELECT * FROM read_parquet('/tmp/graft_s19_eventlog/*.parquet'))
+    s"""WITH ev AS (SELECT * FROM read_parquet('${graft.SparkEntry.EntryInputs}/*.parquet'))
       |SELECT (timestampMs // 60000) * 60000 AS window_start_ms,
       |  shardId AS shard_id,
       |  CAST(sum(CASE WHEN kind = 'record_success' OR (kind = 'record_attempt' AND success) THEN 1 ELSE 0 END) AS BIGINT) AS records_processed,
@@ -1518,6 +1518,8 @@ object StreamingQueries {
     "s23_stream_compacted_ingest" -> (s23StreamCompactedIngest _),
     "s22_stream_versioned_ingest" -> (s22StreamVersionedIngest _),
     "s20_stream_keyed_merge" -> (s20StreamKeyedMerge _),
+    // s19's window_start_ms hashes processing wall-clock minutes: the
+    // oracle matches only against the event log of the same run
     "s19_monitoring_metrics" -> (s19MonitoringMetrics _),
     "s18_stream_dsir_score" -> (streamDsirScore _),
     "s21_stream_drift_audit" -> (streamDriftAudit _),

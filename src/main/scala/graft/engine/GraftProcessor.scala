@@ -76,7 +76,13 @@ final case class CommitTask(
   * Two checkpoint layers by design (SURVEY §1.1): Spark's offset/commit log
   * is the engine checkpoint (exactly-once restart of stream positions); the
   * [[CheckpointStore]] is the application checkpoint, the analog of the
-  * reference's DynamoDB table.
+  * reference's DynamoDB table. The query starts through [[QueryStart]], the
+  * one start path of every streaming query in the program. Spark writes
+  * both log files after every micro-batch; on a `file:` checkpoint
+  * `QueryStart` gives the query a [[LocalCheckpointFileManager]], whose
+  * writes fork no `chmod`/`readlink` process as Spark's default manager
+  * does without libhadoop. Other schemes keep Spark's choice, and so does
+  * a session that names a manager itself.
   *
   * Contract for `onItems`: it receives the micro-batch's item Dataset and
   * should run EXACTLY ONE full action over it (write, collect, count…) —
@@ -117,7 +123,8 @@ final class GraftProcessor[T](
   private val sinkIdOpt: Option[String] =
     if (sink == EventSink.Noop) None else Some(instanceId)
 
-  /** Build + start the streaming query. */
+  /** Build + start the streaming query, through [[QueryStart]] like every
+    * other streaming query in the program. */
   def start(spark: SparkSession, checkpointLocation: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // R4: client-internal throttle retry, bound from config.maxRetries
@@ -166,12 +173,10 @@ final class GraftProcessor[T](
     // query handle, through which it finds the batch's planned ranges.
     val handle = Promise[StreamingQuery]()
     try {
-      val query = reader.load().writeStream
+      val query = QueryStart(spark, reader.load().writeStream
         .queryName(s"graft-$instanceId") // unique: processors may share a stream name
-        .option("checkpointLocation", checkpointLocation)
-        .foreachBatch((batch: DataFrame, batchId: Long) => runBatch(handle.future, batch, batchId))
-        .trigger(trigger)
-        .start()
+        .foreachBatch((batch: DataFrame, batchId: Long) => runBatch(handle.future, batch, batchId)),
+        checkpointLocation, trigger)
       handle.success(query)
       query
     } catch {
@@ -193,10 +198,10 @@ final class GraftProcessor[T](
     emitAll(ProcessingEventType.BatchStart(System.currentTimeMillis()))
     val session = batch.sparkSession
     val records = plannedRecords(Await.result(query, Duration.Inf), session.sparkContext)
-    val commitsAcc =
-      session.sparkContext.collectionAccumulator[CommitTask](s"graft-commits-$batchId")
-
-    val partsAcc = session.sparkContext.longAccumulator(s"graft-parts-$batchId")
+    // unnamed: Spark copies a named accumulator's value into every task's
+    // and stage's `AccumulableInfo`, and the status store keeps it
+    val commitsAcc = session.sparkContext.collectionAccumulator[CommitTask]
+    val partsAcc = session.sparkContext.longAccumulator
 
     val proc = processor
     val cfg = config

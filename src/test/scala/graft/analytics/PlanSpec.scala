@@ -205,6 +205,19 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
+  test("e15 computes its coarse assignment once: the second read is a ReusedExchange (VERDICT r15)") {
+    // the residual slices feed both the sub-codebook sample and the encode.
+    // e15 keeps no persist of them (measured slower, and reverted): exchange
+    // reuse is what shares that subtree, so without it the corpus-sized
+    // coarse assignment, a full scan plus a window, would run twice
+    val df = SparkEntry.queries("e15_ivfpq_topk")(spark, sfDir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    withClue(s"e15 final plan:\n$plan\n") {
+      plan should include("ReusedExchange")
+    }
+  }
+
   test("aggregations are partial+final (map-side combine present)") {
     Seq("q1_pricing_summary", "t6_lang_stats", "d2_dedup_stats").foreach { name =>
       val plan = planOf(name)

@@ -16,8 +16,8 @@ import graft.SparkEntry
 
 /** Records, at every progress event, the caller session's explicit value
   * of each key and every state operator's partition count. The conf is
-  * read under [[StreamDrain.startLock]]: a start holds the per-query
-  * values on the caller's session only inside that lock. */
+  * read under [[graft.engine.QueryStart.lock]]: a start holds the
+  * per-query values on the caller's session only inside that lock. */
 final class ConfProbe(spark: SparkSession, keys: Seq[String])
     extends StreamingQueryListener {
   val seen = new ConcurrentLinkedQueue[Map[String, Option[String]]]()
@@ -25,7 +25,7 @@ final class ConfProbe(spark: SparkSession, keys: Seq[String])
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = ()
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
-    val confs = StreamDrain.startLock.synchronized(
+    val confs = graft.engine.QueryStart.lock.synchronized(
       keys.map(k => k -> spark.conf.getAll.get(k)).toMap)
     seen.add(confs)
     e.progress.stateOperators.foreach(o =>

@@ -29,10 +29,12 @@ class MonitoringGateSpec extends AnyFunSuite with Matchers with SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("s19 folded metrics reconcile with corpus-derived run stats") {
-    val logDir = s"${graft.analytics.Scratch.dir("graft-s19-gate")}/log"
-    spark.conf.set("spark.graft.s19.eventLogDir", logDir)
-    val out = try StreamingQueries.s19MonitoringMetrics(spark, sf).collect()
-    finally spark.conf.unset("spark.graft.s19.eventLogDir")
+    // the fold reads only the event log the run landed in its scratch dir
+    val metrics = StreamingQueries.s19MonitoringMetrics(spark, sf)
+    val logFiles = metrics.inputFiles
+    logFiles should not be empty
+    all(logFiles) should include("/graft-s19-") // the entry's own scratch
+    val out = metrics.collect()
 
     def total(colName: String): Long =
       out.map(r => r.getAs[Long](colName)).sum
@@ -55,7 +57,7 @@ class MonitoringGateSpec extends AnyFunSuite with Matchers with SparkSpec {
     total("iterator_renewals") shouldBe 0L
 
     // commit stats: one successful checkpoint per shard per epoch
-    val log = spark.read.parquet(logDir)
+    val log = spark.read.parquet(logFiles: _*)
     val epochs = log.filter(col("kind") === "batchcomplete").count()
     log.filter(col("kind") === "batchstart").count() shouldBe epochs
     epochs should be >= 1L
