@@ -75,9 +75,9 @@ private[graft] object QueryStart {
   * with one atomic rename. A move that may not overwrite first checks that
   * the target is absent, as Spark's managers do, and drops the temp file
   * when it is not; a move that may, replaces it. So a crash leaves either
-  * the old file or the new one. The temp file
-  * gets no `.crc` sidecar: Hadoop reads a file without one unchecked, and
-  * the target's old sidecar is deleted before the move. */
+  * the old file or the new one. The temp file gets no `.crc` sidecar:
+  * Hadoop reads a file without one unchecked, and the target's old sidecar
+  * is deleted before the move. */
 final class LocalCheckpointFileManager(path: Path, conf: Configuration)
     extends FileSystemBasedCheckpointFileManager(path, conf) {
 
